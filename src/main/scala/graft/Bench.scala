@@ -278,7 +278,7 @@ object Bench {
     * method in bytecode, so reflection reaches it from here; any
     * reflective surprise degrades to the old fixed sleep rather than
     * failing the bench. */
-  private def drainListenerBus(
+  private[graft] def drainListenerBus(
       sc: org.apache.spark.SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)

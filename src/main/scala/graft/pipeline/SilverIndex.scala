@@ -1,44 +1,64 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 
-import graft.operators.{AnnSearch, Dedup, TextSearch}
+import graft.operators.{AnnSearch, Dedup, Sketches, TextSearch}
 
-/** Append-maintained silver tables for the expensive per-document index
-  * artifacts — MinHash signatures and IVF list assignments.
+/** Maintained silver tables for graft's dedup, ANN, text and sketch
+  * artifacts. The reference is a WEEKLY batch (its Prefect crons re-run
+  * the whole chain every Sunday), so at 100 TB the dominant recurring
+  * cost is the re-run, not the first build: every artifact here folds
+  * in only what arrived, and every one of them is one of two shapes.
+  * Each shape's crash protocol lives in one place, so every artifact of
+  * that shape inherits it and its crash specs.
   *
-  * The reference is a WEEKLY batch (its Prefect crons re-run the whole
-  * chain every Sunday), so at 100 TB the dominant recurring cost is not
-  * the first build but the re-run: recomputing shingles + signatures (or
-  * centroid assignments) for 10¹¹ documents to fold in the 10⁸ that are
-  * new. Both artifacts here are per-document deterministic, so an
-  * incremental refresh is EXACT, not approximate:
+  * | artifact                         | shape          | refresh                     |
+  * |----------------------------------|----------------|-----------------------------|
+  * | MinHash signatures (s6, d7)      | PerDocArtifact | [[refreshMinhash]]          |
+  * | frame fingerprints (m9)          | PerDocArtifact | [[refreshFingerprints]]     |
+  * | edit variant keys (d18)          | PerDocArtifact | [[refreshEditIndex]]        |
+  * | shingle hashes (d20–d24)         | PerDocArtifact | [[refreshContainmentIndex]] |
+  * | SimHash signatures (d25)         | PerDocArtifact | [[refreshSimhashIndex]]     |
+  * | semantic signatures + vectors    | PerDocArtifact | [[refreshSemanticLsh]]      |
+  * | BM25 postings (+ doclen)         | PerDocArtifact | [[refreshPostings]]         |
+  * | IVF list assignments             | PerDocArtifact | [[refreshIvf]]              |
+  * | IVF-PQ codes                     | PerDocArtifact | [[refreshIvfPq]]            |
+  * | quantile sample (s8)             | PerDocArtifact | [[refreshQuantileSample]]   |
+  * | KMV sketch (s7)                  | VersionedFold  | [[refreshKmv]]              |
+  * | Bloom bit set (s10)              | VersionedFold  | [[refreshBloom]]            |
+  * | HLL registers (s12)              | VersionedFold  | [[refreshHll]]              |
+  * | Count-Min counters (s9, s14)     | VersionedFold  | [[refreshCms]] (batch id)   |
+  * | drift ledger (s15, s17, s18)     | VersionedFold  | [[refreshDriftLedger]] (batch id) |
+  * | gold MAX rollup (g3)             | VersionedFold  | [[refreshMaxRollup]] (batch id)   |
+  * | component map (d19)              | VersionedFold  | [[refreshComponents]] (batch id)  |
+  * | SCD2 current segment (g6, g7)    | VersionedFold  | [[refreshScd2]] (batch id)  |
   *
-  *  - [[refreshMinhash]] anti-joins the corpus against the indexed doc
-  *    ids, computes (doc, sh, sig) for new docs only, and appends —
-  *    the union is row-identical to a from-scratch build
-  *    (SilverIndexSpec proves it), and the delta run's cost is
-  *    ∝ |new docs| (ScaleSmoke's incremental stage measures it).
-  *  - [[refreshIvf]] pins the coarse quantizer at FIRST build (the
-  *    standard IVF append discipline: centroids freeze, new vectors are
-  *    assigned to the frozen lists and appended, partitioned by
-  *    `list_id` so probes partition-prune). Assignment is per-row
-  *    deterministic against fixed centroids, so incremental == from-
-  *    scratch with the same centroids, exactly. Re-quantize by deleting
-  *    the index dir when drift warrants (the usual FAISS-style rebuild
-  *    cadence decision, left to the operator).
+  *  - '''PerDocArtifact''': the table stores a pure per-document
+  *    function of its input, so a refresh that derives rows for unseen
+  *    ids and appends them is row-identical to a from-scratch build, and
+  *    an at-least-once replay finds no unseen id and appends zero rows.
+  *  - '''VersionedFold''': the table is a merge of every batch so far,
+  *    so each fold writes a whole new version — stage it under a
+  *    hidden `_tmp_` name, one atomic rename commits, superseded
+  *    versions retire after it, and readers take the highest. Folds
+  *    whose merge is not replay-safe name the version after the
+  *    micro-batch id and skip ids already committed.
   *
-  * Caveat shared by both: rows the operator excludes by construction
-  * (empty shingle sets; duplicate ids) are re-derived and re-excluded on
-  * every refresh — the anti-join only skips what the index RETAINS.
-  * Bounded by the excluded population, which is noise in practice.
+  * Two shared pieces sit on top: [[pairBatch]], the intent-guarded
+  * batch of the seven streaming pair emitters, and
+  * [[foreachBatchStream]], the one streaming face, whose checkpoint
+  * lives under the artifact path.
   */
 object SilverIndex {
 
   /** What a refresh did: rows appended this run / total index rows. */
   final case class Refresh(appended: Long, total: Long)
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** True iff `path` holds at least one DATA file — the fs walk alone,
     * no parquet footer read. An append of an EMPTY frame (a quiet
@@ -49,7 +69,7 @@ object SilverIndex {
     * must mean "no index yet", not an error. */
   private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(spark, path)
     // manual recursion so HIDDEN SUBTREES are skipped whole — a flat
     // recursive listing would see e.g. _checkpoint/offsets/0 (the
     // streaming checkpoint under the index path) as a data file, because
@@ -79,8 +99,7 @@ object SilverIndex {
     * fingerprint serve STALE centroids after a rebuild
     * (SilverIndexSpec's maintainIvfPq case caught it). Hidden subtrees
     * skipped whole, as [[readIfData]]. */
-  private def dataStats(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): (Long, Long, Long) = {
+  private def dataStats(fs: FileSystem, dir: Path): (Long, Long, Long) = {
     def walk(d: Path): (Long, Long, Long) =
       fs.listStatus(d).foldLeft((0L, 0L, 0L)) { case ((n, b, t), st) =>
         val name = st.getPath.getName
@@ -95,11 +114,32 @@ object SilverIndex {
     if (fs.exists(dir)) walk(dir) else (0L, 0L, 0L)
   }
 
-  /** The fingerprint string shared by sidecar and caches. */
-  private def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): String = {
+  /** The fingerprint string shared by sidecars and caches. */
+  private def fingerprint(fs: FileSystem, dir: String): String = {
     val (files, bytes, mtime) = dataStats(fs, new Path(dir))
     s"$files:$bytes:$mtime"
+  }
+
+  /** A one-line JSON sidecar as key → value (quotes stripped); None when
+    * it is missing or unreadable, so a torn write reads as stale. */
+  private def readSidecar(fs: FileSystem, f: Path)
+      : Option[Map[String, String]] =
+    if (!fs.exists(f)) None
+    else
+      try {
+        val in = fs.open(f)
+        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        Some(txt.stripPrefix("{").stripSuffix("}").split(",").map { p =>
+          val Array(k, v) = p.split(":", 2)
+          k.trim.stripPrefix("\"").stripSuffix("\"") ->
+            v.trim.stripPrefix("\"").stripSuffix("\"")
+        }.toMap)
+      } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def writeSidecar(fs: FileSystem, f: Path, json: String): Unit = {
+    val out = fs.create(f, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
   private def metaFile(dir: String) = new Path(dir, "_rowmeta.json")
@@ -111,41 +151,20 @@ object SilverIndex {
     * without it every refresh pays two full-table count jobs, and at
     * 10¹¹ indexed rows even a footer-statistics count is a distributed
     * job over every file. */
-  private def readMetaRows(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Option[Long] = {
-    val f = metaFile(dir)
-    if (!fs.exists(f)) None
-    else
-      try {
-        val in = fs.open(f)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val kv = txt.stripPrefix("{").stripSuffix("}").split(",").map { p =>
-          val Array(k, v) = p.split(":", 2)
-          k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim
-        }.toMap
-        if (kv("fp").stripPrefix("\"").stripSuffix("\"") ==
-            fingerprint(fs, dir))
-          Some(kv("rows").toLong)
-        else None
-      } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private def readMetaRows(fs: FileSystem, dir: String): Option[Long] =
+    readSidecar(fs, metaFile(dir))
+      .filter(_.get("fp").contains(fingerprint(fs, dir)))
+      .flatMap(_.get("rows").flatMap(_.toLongOption))
 
-  private def writeMetaRows(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, rows: Long): Unit = {
-    val fp = fingerprint(fs, dir)
-    val out = fs.create(metaFile(dir), true)
-    try out.write(
-      s"""{"rows":$rows,"fp":"$fp"}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeMetaRows(fs: FileSystem, dir: String, rows: Long): Unit =
+    writeSidecar(fs, metaFile(dir),
+      s"""{"rows":$rows,"fp":"${fingerprint(fs, dir)}"}""")
 
   /** Rows in the existing table: the validated sidecar when fresh, a
     * count otherwise. */
   private def existingRows(spark: SparkSession, dir: String,
       existing: Option[DataFrame]): Long = existing.fold(0L) { df =>
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    readMetaRows(fs, dir).getOrElse(df.count())
+    readMetaRows(fsOf(spark, dir), dir).getOrElse(df.count())
   }
 
   /** Append `frame` to `dir` as parquet, counting the appended rows with
@@ -156,7 +175,6 @@ object SilverIndex {
   private def appendCounted(frame: DataFrame, dir: String,
       partitionCols: Seq[String], before: Long,
       shape: DataFrame => DataFrame = identity): Refresh = {
-    val spark = frame.sparkSession
     val obs = org.apache.spark.sql.Observation()
     val observed = shape(frame.observe(obs, count(lit(1)).as("n")))
     val w = observed.write.mode("append")
@@ -164,9 +182,253 @@ object SilverIndex {
       .parquet(dir)
     val appended = obs.get("n").asInstanceOf[Long]
     val total = before + appended
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    writeMetaRows(fs, dir, total)
+    writeMetaRows(fsOf(frame.sparkSession, dir), dir, total)
     Refresh(appended, total)
+  }
+
+  /** The one-row stamp probe: an append-only table keeps its config
+    * columns uniform, so ONE stored row (CollectLimit — a single row
+    * group) exposes a build that differs from the request; a NULL stamp
+    * passes. A full-column aggregate here would scan the whole table on
+    * every call (~0.5 GB of signatures at 1M docs × 64 hashes). */
+  private def requireStamp(ix: DataFrame, path: String, what: String,
+      stamp: Column, label: String, want: Any, verb: String): Unit =
+    ix.select(stamp).limit(1).collect().headOption.foreach { r =>
+      require(r.isNullAt(0) || r.get(0) == want,
+        s"$what at $path was built at $label=${r.get(0)}, $verb " +
+          s"$label=$want — rebuild, don't mix")
+    }
+
+  // ------------------------------------------------------ PerDocArtifact
+
+  /** PerDocArtifact — the shape of every table that stores a pure
+    * per-document function of its input. One refresh reads the table if
+    * it has data ([[existing]]), runs the one-row stamp probe
+    * ([[probe]]), anti-joins the input on the id ([[unseen]]), and
+    * appends what it derives from the unseen rows ([[append]] — the row
+    * count rides the write job, the total rides the sidecar, so a
+    * refresh pays zero count jobs). Because each stored row depends on
+    * its own document only, the union of appends is row-identical to a
+    * from-scratch build, and an at-least-once replay appends zero rows.
+    *
+    * Append-only: an edited document means rebuild (or version the
+    * path); subjects leave through the erase functions. Rows the
+    * operator excludes by construction (empty shingle sets, duplicate
+    * ids) are re-derived and re-excluded on every refresh — the
+    * anti-join only skips what the table RETAINS, a cost bounded by the
+    * excluded population. `oneRowPerId` tables skip the distinct over
+    * the stored ids before the anti-join. */
+  private final class PerDocArtifact(spark: SparkSession, path: String,
+      storedId: String = "doc", oneRowPerId: Boolean = false) {
+    val existing: Option[DataFrame] = readIfData(spark, path)
+
+    def probe(what: String, stamp: Column, label: String, want: Any): Unit =
+      existing.foreach(
+        requireStamp(_, path, what, stamp, label, want, "refresh requested"))
+
+    /** The rows of `src` whose `idCol` is not stored yet. */
+    def unseen(src: DataFrame, idCol: String): DataFrame =
+      existing.fold(src) { ix =>
+        val ids = ix.select(col(storedId).as(idCol))
+        src.join(if (oneRowPerId) ids else ids.distinct(), Seq(idCol),
+          "left_anti")
+      }
+
+    def append(rows: DataFrame, partitionCols: Seq[String] = Nil,
+        shape: DataFrame => DataFrame = identity): Refresh =
+      appendCounted(rows, path, partitionCols,
+        existingRows(spark, path, existing), shape)
+  }
+
+  // ------------------------------------------------------- VersionedFold
+
+  /** VersionedFold — the shape of every artifact that is a MERGE of all
+    * batches so far (a sketch, a ledger, a rollup, a component map, the
+    * SCD2 current segment). An in-place overwrite would delete the
+    * directory before the job commits, so a crash mid-write would lose
+    * the ONLY copy of the accumulated state (raw inputs are never
+    * stored) and every later read would be silently wrong. Instead each
+    * fold:
+    *
+    *  1. lists the committed `v<n>` directories under `root`;
+    *  2. applies the batch-id replay guard, when the fold has one
+    *     ([[foldBatch]]);
+    *  3. stages the next version under a hidden `_tmp_` name — a crash
+    *     here leaves an orphan the replay overwrites;
+    *  4. renames it to `v<n>` — the commit point. Rename failures
+    *     REPORT false rather than throw (e.g. a destination left by a
+    *     duplicate writer), so a failed rename raises before step 5,
+    *     which would otherwise delete the only committed copy;
+    *  5. retires superseded versions — best effort (single-writer
+    *     foreachBatch): a crash here leaves stale versions that
+    *     [[latest]] skips and the next commit retires.
+    *
+    * [[latest]] is the one reader: the highest committed version. */
+  private final class VersionedFold(spark: SparkSession, root: String,
+      what: String) {
+    private val fs = fsOf(spark, root)
+    private val committed: Seq[Long] = {
+      val p = new Path(root)
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
+        case n if n.startsWith("v") && n.drop(1).forall(_.isDigit) =>
+          n.drop(1).toLong
+      }
+    }
+    /** The highest committed version, -1 when none. */
+    val last: Long = if (committed.isEmpty) -1L else committed.max
+
+    /** The highest committed version (or its `sub` directory), if any. */
+    def stored(sub: String = ""): Option[DataFrame] =
+      if (last < 0) None else Some(spark.read.parquet(s"$root/v$last$sub"))
+
+    def latest(sub: String = ""): DataFrame = {
+      require(last >= 0, s"no committed $what under $root")
+      spark.read.parquet(s"$root/v$last$sub")
+    }
+
+    /** A fold whose merge absorbs replays by its algebra (KMV truncated
+      * union, Bloom set union, HLL register max): versions are a plain
+      * sequence that only orders the copies. The next state is
+      * materialized before the commit (its lazy plan reads the version
+      * being replaced), and an empty fold commits nothing — an empty
+      * `v0` has no parquet schema to read back and would wedge every
+      * later fold. */
+    def foldNext(merge: Option[DataFrame] => DataFrame): Refresh = {
+      val next = merge(stored()).localCheckpoint(true)
+      val n = next.count()
+      if (n == 0) Refresh(0, 0)
+      else {
+        commit(last + 1)(next.write.mode("overwrite").parquet(_))
+        Refresh(n, n)
+      }
+    }
+
+    /** A fold guarded by the foreachBatch micro-batch id: the version IS
+      * the batch id, so one rename commits the state AND the transaction
+      * record together (a separate marker file would leave a window
+      * where one is durable without the other), and a batch id at or
+      * below the last committed one is a no-op. foreachBatch delivers
+      * ids monotonically, so one version number is the whole
+      * transaction log. `stage` runs only for a new id and returns the
+      * writer of the staged version, or None to commit nothing. */
+    def foldBatch(batchId: Long)(stage: => Option[String => Unit]): Refresh =
+      if (batchId <= last) Refresh(0, last)
+      else stage.fold(Refresh(0, last)) { write =>
+        commit(batchId)(write)
+        Refresh(batchId, batchId)
+      }
+
+    private def commit(version: Long)(write: String => Unit): Unit = {
+      val (tmp, dst) = (s"$root/_tmp_v$version", s"$root/v$version")
+      write(tmp)
+      require(fs.rename(new Path(tmp), new Path(dst)),
+        s"$what commit rename failed: $tmp -> $dst (old versions kept)")
+      committed.foreach(v => fs.delete(new Path(s"$root/v$v"), true))
+    }
+  }
+
+  /** The staged writer of a [[VersionedFold.foldBatch]] whose state is
+    * one frame — materialized first, since its plan reads the version
+    * being replaced. */
+  private def staged(next: DataFrame): Option[String => Unit] = {
+    val out = next.localCheckpoint(true)
+    Some(out.write.mode("overwrite").parquet(_))
+  }
+
+  // ----------------------------------------------- streaming + pair batch
+
+  /** The one streaming face: every micro-batch of `rows` runs `body`
+    * with its batch id, and the checkpoint lives under `home` (the
+    * artifact path) so the two travel together. */
+  private def foreachBatchStream(rows: DataFrame, home: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        body(batch.toDF(), batchId)
+      }
+      .option("checkpointLocation", s"$home/_checkpoint")
+      .start()
+
+  /** Continuous index maintenance: fold every micro-batch of a STREAMING
+    * document frame into the index at `path` through `refresh` — the
+    * same exact batch refreshes, driven by Structured Streaming's
+    * `foreachBatch`. foreachBatch is at-least-once (a batch can replay
+    * after a failure between the append and the checkpoint commit); a
+    * PerDocArtifact's id anti-join and a VersionedFold's merge algebra
+    * or batch-id guard make the replay a no-op — at-least-once
+    * delivery, exactly-once index (StreamingIndexSpec forces re-runs).
+    *
+    * This is the "weekly cron → continuous" upgrade of the reference's
+    * batch cadence: the index is always as fresh as the last
+    * micro-batch, and each batch costs ∝ its own new docs, never a
+    * corpus recompute. */
+  def streamingRefresh(docs: DataFrame, path: String)(
+      refresh: DataFrame => Refresh)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    foreachBatchStream(docs, path)((batch, _) => refresh(batch))
+
+  /** The TRANSACTION-INTENT read-or-derive step of [[pairBatch]]: the
+    * batch's new-id set, persisted before any table mutates. The two
+    * mutations of a pair batch (artifact append, pair write) are not
+    * atomic together — a crash between them would otherwise lose the
+    * batch's pairs forever, because a replay's anti-join against the
+    * ALREADY-APPENDED rows finds nothing new. The stored intent makes
+    * the replay reuse the original new-id set instead of re-deriving it
+    * against mutated state. One tiny file per batch, kept (deleting it
+    * would reopen the same window).
+    *
+    * The guard is on COMMITTED data files, not bare existence: the dir
+    * exists as soon as a write STARTS, and fs.exists would send the
+    * replay into a failing (or empty) read over leftover debris. The
+    * intent itself commits by STAGE-THEN-RENAME (one file via
+    * coalesce(1), staged under `_tmp_`, one atomic dir rename): a direct
+    * multi-file write commits part files one rename at a time, so a
+    * crash MID-job-commit could leave a readable but INCOMPLETE id set
+    * and the replay would silently drop the missing ids' rows and pairs
+    * forever. Any pre-rename crash leaves no committed data files and
+    * the replay re-derives (nothing has mutated before the intent
+    * commit). `ids` must be the batch's distinct ids as a `doc` column. */
+  private def intentNewIds(spark: SparkSession, sigPath: String,
+      batchId: Long, ids: DataFrame): DataFrame = {
+    val intentDir = s"$sigPath/_intent/batch$batchId"
+    if (hasDataFiles(spark, intentDir)) spark.read.parquet(intentDir)
+    else {
+      val fresh = readIfData(spark, sigPath)
+        .fold(ids)(ix =>
+          ids.join(ix.select("doc"), Seq("doc"), "left_anti"))
+        .localCheckpoint(true)
+      val fs = fsOf(spark, sigPath)
+      val tmp = s"$sigPath/_intent/_tmp_batch$batchId"
+      fresh.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val dst = new Path(intentDir)
+      if (fs.exists(dst)) fs.delete(dst, true) // pre-fix debris
+      require(fs.rename(new Path(tmp), dst),
+        s"intent commit rename failed: $tmp -> $intentDir")
+      fresh
+    }
+  }
+
+  /** The intent-guarded pair batch — the foreachBatch body of every
+    * streaming pair emitter: the batch's new ids ([[intentNewIds]]),
+    * then `refresh` of the artifact at `sigPath` over the batch
+    * pre-filtered to those ids (the refresh keeps its own anti-join as
+    * the append's replay guard), then `delta` — the pairs touching a
+    * new id, computed against the post-append artifact — into a
+    * per-batch OVERWRITE partition. Each pair lands exactly once, in
+    * the batch where its later-arriving member arrives, so the
+    * accumulated pairs equal a from-scratch pass over the same corpus
+    * (the s6 contract); a replay reuses the stored intent and the same
+    * post-append artifact, so it re-emits the identical pairs into the
+    * same partition instead of duplicating them. */
+  private def pairBatch(batch: DataFrame, batchId: Long, idCol: String,
+      sigPath: String, pairsPath: String)(refresh: DataFrame => Refresh)(
+      delta: DataFrame => DataFrame): Unit = {
+    val newIds = intentNewIds(batch.sparkSession, sigPath, batchId,
+      batch.select(col(idCol).as("doc")).distinct())
+    refresh(batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
+      "left_semi"))
+    delta(newIds).write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
   }
 
   // ---------------------------------------------------------------- MinHash
@@ -176,31 +438,14 @@ object SilverIndex {
     * appended. Returns counts; read the index back with [[minhashIndex]].
     * Parameters (`n`, `numHashes`) must match the original build — the
     * stored signature length is authoritative downstream, so a mismatch
-    * is caught by the width check here rather than silently mixed. */
+    * is caught by the width probe here rather than silently mixed. */
   def refreshMinhash(docs: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int, path: String): Refresh = {
-    val spark = docs.sparkSession
-    val existing = readIfData(spark, path)
-    val newDocs = existing.fold(docs) { ix =>
-      // width sanity from ONE stored row (CollectLimit — reads a single
-      // row group): the append-only discipline writes uniform widths, so
-      // any row exposes a config mismatch, while the previous
-      // max(size(sig)) was an unpushable full scan of the signature
-      // column on EVERY refresh (~0.5 GB at 1M docs × 64 hashes)
-      ix.select(size(col("sig")).as("w")).limit(1).collect()
-        .headOption.foreach { width =>
-          require(width.isNullAt(0) || width.getInt(0) == numHashes,
-            s"index at $path has signature width ${width.get(0)}, " +
-              s"refresh requested $numHashes — rebuild, don't mix")
-        }
-      docs.join(ix.select(col("doc").as(idCol)), Seq(idCol), "left_anti")
-    }
-    val before = existingRows(spark, path, existing)
-    // appended measured by an Observation on the write job itself (and
-    // the sidecar carries the running total), so a refresh pays zero
-    // count jobs — see appendCounted
-    appendCounted(Dedup.minhashSets(newDocs, idCol, textCol, n, numHashes),
-      path, Nil, before)
+    val ix = new PerDocArtifact(docs.sparkSession, path, oneRowPerId = true)
+    ix.probe("MinHash index", size(col("sig")), "signature width",
+      numHashes)
+    ix.append(Dedup.minhashSets(ix.unseen(docs, idCol), idCol, textCol, n,
+      numHashes))
   }
 
   /** The signature table as [[graft.operators.Dedup.minhashPairsFromSets]]
@@ -214,33 +459,60 @@ object SilverIndex {
       theta: Double): DataFrame =
     Dedup.minhashPairsFromSets(minhashIndex(spark, path), rowsPerBand, theta)
 
+  /** Streaming NEAR-DUP detection: every micro-batch appends its
+    * genuinely-new docs' signatures to the table at `sigPath` and emits
+    * the near-dup pairs INVOLVING those new docs against the full
+    * post-append signature table ([[graft.operators.Dedup
+    * .minhashPairsDelta]]) into `pairsPath` — the accumulated pairs
+    * table is row-identical to a from-scratch batch [[graft.operators
+    * .Dedup.minhashLshPairs]] over the same corpus (the s6 gate
+    * contract, [[pairBatch]]). */
+  def streamingNearDupPairs(docs: DataFrame, idCol: String,
+      textCol: String, n: Int, numHashes: Int, rowsPerBand: Int,
+      theta: Double, sigPath: String, pairsPath: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    foreachBatchStream(docs, sigPath)(nearDupBatch(_, _, idCol, textCol, n,
+      numHashes, rowsPerBand, theta, sigPath, pairsPath))
+
+  /** One micro-batch of [[streamingNearDupPairs]] — exposed so a spec
+    * can drive the RECOVERY path directly over a hand-built
+    * half-committed directory (crash after the intent commit, crash
+    * after the signature append, partial intent write). */
+  private[pipeline] def nearDupBatch(batch: DataFrame, batchId: Long,
+      idCol: String, textCol: String, n: Int, numHashes: Int,
+      rowsPerBand: Int, theta: Double, sigPath: String,
+      pairsPath: String): Unit =
+    pairBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshMinhash(_, idCol, textCol, n, numHashes, sigPath))(newIds =>
+      Dedup.minhashPairsDelta(minhashIndex(batch.sparkSession, sigPath),
+        newIds, rowsPerBand, theta))
+
+  /** [[streamingRefresh]] pre-wired to [[refreshMinhash]]. */
+  def streamingRefreshMinhash(docs: DataFrame, idCol: String,
+      textCol: String, n: Int, numHashes: Int, path: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamingRefresh(docs, path)(
+      refreshMinhash(_, idCol, textCol, n, numHashes, path))
+
   // -------------------------- perceptual frame FINGERPRINT index (m9)
 
   /** Bring the perceptual frame-fingerprint table (doc, frame_idx,
     * fingerprint) at `path` up to date with `frames` (the
     * [[graft.operators.Multimodal.sampleFrames]] shape): fingerprints
     * compute ONLY for doc ids not yet indexed, and append — the
-    * [[refreshMinhash]] discipline verbatim, because the fingerprint
-    * is per-frame deterministic ([[graft.operators.Multimodal
+    * fingerprint is per-frame deterministic ([[graft.operators.Multimodal
     * .dhashFingerprint]] — pure byte arithmetic), so incremental ==
-    * from-scratch exactly. Frames are append-heavy in a real feed
-    * (m8's per-run recompute pays the full corpus every time); the
-    * index pays only the arriving docs. Append-only: an edited doc
-    * means rebuild (or version the path); a SUBJECT doc is erased via
+    * from-scratch exactly. Frames are append-heavy in a real feed (m8's
+    * per-run recompute pays the full corpus every time); the index pays
+    * only the arriving docs. A SUBJECT doc is erased via
     * [[eraseFingerprints]] (the p6 path). */
   def refreshFingerprints(frames: DataFrame, idCol: String,
       frameIdxCol: String, frameCol: String, path: String): Refresh = {
-    val spark = frames.sparkSession
-    val existing = readIfData(spark, path)
-    val newDocs = existing.fold(frames)(ix => frames.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(newDocs.select(col(idCol).as("doc"),
+    val ix = new PerDocArtifact(frames.sparkSession, path)
+    ix.append(ix.unseen(frames, idCol).select(col(idCol).as("doc"),
       col(frameIdxCol).cast("int").as("frame_idx"),
       graft.operators.Multimodal.dhashFingerprint(col(frameCol))
-        .as("fingerprint")),
-      path, Nil, before)
+        .as("fingerprint")))
   }
 
   /** The fingerprint table as stored: (doc, frame_idx, fingerprint). */
@@ -259,36 +531,25 @@ object SilverIndex {
           col("fingerprint").as("simhash")),
       maxDist)
 
-  /** One micro-batch of [[streamingFramePairs]] — the [[nearDupBatch]]
-    * protocol verbatim over frame fingerprints: transaction intent
-    * (the same crash windows, the same stage-then-rename commit),
-    * fingerprint append for the intent's new docs only, then the
-    * batch's pairs ([[Dedup.hammingPairsDelta]] — pairs touching a new
-    * doc, canonicalized) into a per-batch OVERWRITE partition so a
-    * replay re-emits identically instead of duplicating. */
+  /** One micro-batch of [[streamingFramePairs]] — [[pairBatch]] over
+    * frame fingerprints, emitting the Hamming pairs touching a new doc
+    * ([[Dedup.hammingPairsDelta]] over frame keys). */
   private[pipeline] def frameNearDupBatch(batch: DataFrame,
       batchId: Long, idCol: String, frameIdxCol: String,
       frameCol: String, frameStride: Long, maxDist: Int,
-      sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshFingerprints(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, frameIdxCol, frameCol, sigPath)
-    val keyed = fingerprintIndex(spark, sigPath)
-      .select(col("doc"),
-        (col("doc") * frameStride + col("frame_idx")).as("fid"),
-        col("fingerprint"))
-    Dedup.hammingPairsDelta(
-        keyed.select(col("fid").as("doc"),
-          col("fingerprint").as("simhash")),
-        keyed.join(newIds, Seq("doc"), "left_semi").select("fid"),
-        maxDist)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+      sigPath: String, pairsPath: String): Unit =
+    pairBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshFingerprints(_, idCol, frameIdxCol, frameCol, sigPath)) {
+      newIds =>
+        val keyed = fingerprintIndex(batch.sparkSession, sigPath)
+          .select(col("doc"),
+            (col("doc") * frameStride + col("frame_idx")).as("fid"),
+            col("fingerprint"))
+        Dedup.hammingPairsDelta(
+          keyed.select(col("fid").as("doc"), col("fingerprint").as("simhash")),
+          keyed.join(newIds, Seq("doc"), "left_semi").select("fid"),
+          maxDist)
+    }
 
   /** Continuous frame near-dup maintenance: each micro-batch appends
     * its new docs' fingerprints and emits exactly the pairs involving
@@ -297,49 +558,27 @@ object SilverIndex {
       frameIdxCol: String, frameCol: String, frameStride: Long,
       maxDist: Int, sigPath: String, pairsPath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    frames.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        frameNearDupBatch(batch.toDF(), batchId, idCol, frameIdxCol,
-          frameCol, frameStride, maxDist, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    foreachBatchStream(frames, sigPath)(frameNearDupBatch(_, _, idCol,
+      frameIdxCol, frameCol, frameStride, maxDist, sigPath, pairsPath))
 
   // ------------------------- symmetric-delete edit-pair index (d18)
 
   /** Bring the symmetric-delete variant-key table (doc, str, vk, d) at
-    * `path` up to date with `df` — the persisted/incremental face d17's
-    * [[graft.operators.Dedup.editPairs]] lacked (VERDICT r16 task 3,
-    * the m9/d7 discipline): variants compute ONLY for ids not yet
-    * indexed and append, and because the deletion neighborhood is a
-    * pure per-row function of the string, delta ≡ scratch EXACTLY. The
-    * stored `d` column pins the build's maxDist (uniform by the
-    * append-only discipline, so ONE row exposes a config mismatch —
-    * the [[refreshMinhash]] width probe). Append-only: an edited key
-    * means rebuild (or version the path); a subject row is erased via
+    * `path` up to date with `df` — the persisted/incremental face of
+    * d17's [[graft.operators.Dedup.editPairs]]: variants compute ONLY
+    * for ids not yet indexed and append, and because the deletion
+    * neighborhood is a pure per-row function of the string, delta ≡
+    * scratch EXACTLY. The stored `d` column pins the build's maxDist
+    * (the one-row stamp probe). A subject row is erased via
     * [[eraseEditIndex]] (the p6 path). */
   def refreshEditIndex(df: DataFrame, idCol: String, strCol: String,
       maxDist: Int, path: String): Refresh = {
-    val spark = df.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach { ix =>
-      ix.select(col("d")).limit(1).collect().headOption.foreach { r =>
-        require(r.isNullAt(0) || r.getInt(0) == maxDist,
-          s"edit index at $path was built at maxDist ${r.get(0)}, " +
-            s"refresh requested $maxDist — rebuild, don't mix")
-      }
-    }
-    val newDocs = existing.fold(df)(ix => df.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(
-      graft.operators.Dedup
-        .editVariantKeys(newDocs, idCol, strCol, maxDist)
-        .select(col("id").as("doc"), col("str"), col("vk"),
-          lit(maxDist).as("d")),
-      path, Nil, before)
+    val ix = new PerDocArtifact(df.sparkSession, path)
+    ix.probe("edit index", col("d"), "maxDist", maxDist)
+    ix.append(Dedup.editVariantKeys(ix.unseen(df, idCol), idCol, strCol,
+        maxDist)
+      .select(col("id").as("doc"), col("str"), col("vk"),
+        lit(maxDist).as("d")))
   }
 
   /** The variant-key table as stored: (doc, str, vk, d). */
@@ -355,40 +594,25 @@ object SilverIndex {
   def editPairsFromIndex(spark: SparkSession, path: String,
       maxDist: Int, maxVariantOcc: Long = Long.MaxValue): DataFrame = {
     val ix = editIndex(spark, path)
-    ix.select(col("d")).limit(1).collect().headOption.foreach { r =>
-      require(r.isNullAt(0) || r.getInt(0) == maxDist,
-        s"edit index at $path was built at maxDist ${r.get(0)}, " +
-          s"serve requested $maxDist")
-    }
-    graft.operators.Dedup.editPairsFromKeys(
+    requireStamp(ix, path, "edit index", col("d"), "maxDist", maxDist,
+      "serve requested")
+    Dedup.editPairsFromKeys(
       ix.select(col("doc").as("id"), col("str"), col("vk")),
       maxDist, maxVariantOcc)
   }
 
-  /** One micro-batch of [[streamingEditPairs]] — the [[nearDupBatch]]
-    * transaction-intent protocol verbatim over variant keys: intent
-    * (same crash windows, same stage-then-rename commit), variant
-    * append for the intent's new ids only, then exactly the pairs
-    * touching a new id ([[graft.operators.Dedup.editPairsDelta]],
-    * canonicalized) into a per-batch OVERWRITE partition so a replay
-    * re-emits identically instead of duplicating. */
+  /** One micro-batch of [[streamingEditPairs]] — [[pairBatch]] over
+    * variant keys, emitting exactly the pairs touching a new id
+    * ([[graft.operators.Dedup.editPairsDelta]], canonicalized). */
   private[pipeline] def editPairsBatch(batch: DataFrame, batchId: Long,
       idCol: String, strCol: String, maxDist: Int, maxVariantOcc: Long,
-      sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshEditIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, strCol, maxDist, sigPath)
-    graft.operators.Dedup.editPairsDelta(
-        editIndex(spark, sigPath)
+      sigPath: String, pairsPath: String): Unit =
+    pairBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshEditIndex(_, idCol, strCol, maxDist, sigPath))(newIds =>
+      Dedup.editPairsDelta(
+        editIndex(batch.sparkSession, sigPath)
           .select(col("doc").as("id"), col("str"), col("vk")),
-        newIds, maxDist, maxVariantOcc)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+        newIds, maxDist, maxVariantOcc))
 
   /** Continuous edit-pair maintenance: each micro-batch appends its
     * new ids' deletion variants and emits exactly the pairs involving
@@ -397,121 +621,84 @@ object SilverIndex {
       maxDist: Int, sigPath: String, pairsPath: String,
       maxVariantOcc: Long = Long.MaxValue)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        editPairsBatch(batch.toDF(), batchId, idCol, strCol, maxDist,
-          maxVariantOcc, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    foreachBatchStream(rows, sigPath)(editPairsBatch(_, _, idCol, strCol,
+      maxDist, maxVariantOcc, sigPath, pairsPath))
 
   // ---------------- persisted containment-pairs index (d20, r19)
 
-  /** Bring the distinct-shingle-hash table (doc, sz, hashes, n) at
-    * `path` up to date with `df` — the persisted face d14/d15's
-    * [[graft.operators.Dedup.containmentPairs]] lacked (VERDICT r18
-    * task 2, the d7/d18/m9 id-anti-join discipline): the per-doc rows
+  /** Bring the distinct-shingle-hash table (doc, sz, hashes, n, kind) at
+    * `path` up to date with `df` — the persisted face of d14/d15's
+    * [[graft.operators.Dedup.containmentPairs]]: the per-doc rows
     * ([[graft.operators.Dedup.containmentDocRows]] — ascending-sorted
     * distinct xxhash64 grams + the TRUE distinct-shingle count) are a
     * pure function of the text, so delta ≡ scratch EXACTLY. The stored
-    * `n` column pins the build's shingle width (uniform by the
-    * append-only discipline — ONE row exposes a mismatch, the
-    * [[refreshMinhash]] probe). THETA-FREE: the containment threshold,
-    * and the rarest-prefix filter it sizes, are serve-time choices
+    * `n` and `kind` columns pin the build (the one-row stamp probe).
+    * THETA-FREE: the containment threshold, and the rarest-prefix
+    * filter it sizes, are serve-time choices
     * ([[containmentPairsFromIndex]]) — global gram rarity is a
-    * corpus-wide property the per-doc append cannot know (the d18
-    * hot-variant-valve stance), and the verified output is
-    * prefix-choice-independent, so nothing threshold-shaped belongs in
-    * the artifact; one index answers any audit threshold. Append-only:
-    * an edited doc means rebuild (or version the path); a subject doc
-    * is erased via [[eraseContainmentIndex]] (the p6 path). */
+    * corpus-wide property the per-doc append cannot know, and the
+    * verified output is prefix-choice-independent, so one index answers
+    * any audit threshold. A subject doc is erased via
+    * [[eraseContainmentIndex]] (the p6 path). */
   def refreshContainmentIndex(df: DataFrame, idCol: String,
       textCol: String, n: Int, path: String,
       kind: String = "word"): Refresh = {
-    val spark = df.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach(ix => probeShingleBuild(ix, path, n, kind,
+    val ix = new PerDocArtifact(df.sparkSession, path)
+    ix.existing.foreach(probeShingleBuild(_, path, n, kind,
       "refresh requested"))
-    val newDocs = existing.fold(df)(ix => df.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(
-      graft.operators.Dedup
-        .containmentDocRows(newDocs, idCol, textCol, n, kind)
-        .withColumn("n", lit(n))
-        .withColumn("kind", lit(kind)),
-      path, Nil, before)
+    ix.append(Dedup.containmentDocRows(ix.unseen(df, idCol), idCol,
+        textCol, n, kind)
+      .withColumn("n", lit(n))
+      .withColumn("kind", lit(kind)))
   }
 
-  /** One-row probe that a stored shingle table was built at the
-    * requested (n, kind) — the d18 uniform-config discipline: the
-    * append-only refresh keeps the config columns uniform, so ONE row
-    * exposes a mismatch. A table written before the `kind` column
-    * existed reads as the word build it necessarily was. */
+  /** One-row stamp probes that a stored shingle table was built at the
+    * requested (n, kind). */
   private def probeShingleBuild(ix: DataFrame, path: String, n: Int,
       kind: String, verb: String): Unit = {
-    ix.select(col("n")).limit(1).collect().headOption.foreach { r =>
-      require(r.isNullAt(0) || r.getInt(0) == n,
-        s"shingle index at $path was built at n=${r.get(0)}, " +
-          s"$verb $n — rebuild, don't mix")
-    }
-    val storedKind =
-      if (!ix.columns.contains("kind")) Some("word")
-      else ix.select(col("kind")).limit(1).collect().headOption
-        .flatMap(r => Option(r.getString(0)))
-    storedKind.foreach(k => require(k == kind,
-      s"shingle index at $path was built over $k grams, " +
-        s"$verb $kind — rebuild, don't mix"))
+    requireStamp(ix, path, "shingle index", col("n"), "n", n, verb)
+    requireStamp(ix, path, "shingle index", col("kind"), "kind", kind, verb)
   }
 
   /** The stored per-doc shingle-hash table: (doc, sz, hashes, n, kind). */
   def containmentIndex(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** The probed (doc, sz, hashes) rows every shingle serve reads. */
+  private def shingleRows(spark: SparkSession, path: String, n: Int,
+      kind: String): DataFrame = {
+    val ix = containmentIndex(spark, path)
+    probeShingleBuild(ix, path, n, kind, "serve requested")
+    ix.select(col("doc"), col("sz"), col("hashes"))
+  }
+
   /** Containment pairs served from the PERSISTED index — the
     * weekly-audit shape (zero text read, zero shingling recompute;
     * [[graft.operators.Dedup.containmentPairsFromStored]]): output ≡
     * the scratch [[graft.operators.Dedup.containmentPairs]] row-for-
     * row at the same (n, θ), so d14's brute-force oracle applies
-    * VERBATIM (the d18 pattern — the gate's d20 entry proves it every
-    * battery). `n` must match the stored build (one-row probe raises,
-    * never silently mixes). */
+    * VERBATIM (the gate's d20 entry proves it every battery). `n` must
+    * match the stored build (one-row probe raises, never silently
+    * mixes). */
   def containmentPairsFromIndex(spark: SparkSession, path: String,
-      n: Int, theta: Double, kind: String = "word"): DataFrame = {
-    val ix = containmentIndex(spark, path)
-    probeShingleBuild(ix, path, n, kind, "serve requested")
-    graft.operators.Dedup.containmentPairsFromStored(
-      ix.select(col("doc"), col("sz"), col("hashes")), theta)
-  }
+      n: Int, theta: Double, kind: String = "word"): DataFrame =
+    Dedup.containmentPairsFromStored(shingleRows(spark, path, n, kind),
+      theta)
 
-  /** One micro-batch of [[streamingContainmentPairs]] — the
-    * [[editPairsBatch]] transaction-intent protocol verbatim over
-    * shingle-hash rows: intent (same crash windows, same stage-then-
-    * rename commit), row append for the intent's new docs only, then
-    * exactly the pairs touching a new doc ([[graft.operators.Dedup
-    * .containmentPairsDelta]] — rarity ranked as-of-batch, choice-
-    * independent, so the union of deltas ≡ the full serve with NO
-    * valve caveat) into a per-batch OVERWRITE partition so a replay
-    * re-emits identically instead of duplicating. */
+  /** One micro-batch of [[streamingContainmentPairs]] — [[pairBatch]]
+    * over shingle-hash rows, emitting exactly the pairs touching a new
+    * doc ([[graft.operators.Dedup.containmentPairsDelta]] — rarity
+    * ranked as-of-batch, choice-independent, so the union of deltas ≡
+    * the full serve with NO valve caveat). */
   private[pipeline] def containmentPairsBatch(batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, n: Int,
-      theta: Double, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshContainmentIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, textCol, n, sigPath)
-    graft.operators.Dedup.containmentPairsDelta(
-        containmentIndex(spark, sigPath)
+      theta: Double, sigPath: String, pairsPath: String): Unit =
+    pairBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshContainmentIndex(_, idCol, textCol, n, sigPath))(newIds =>
+      Dedup.containmentPairsDelta(
+        containmentIndex(batch.sparkSession, sigPath)
           .select(col("doc"), col("sz"), col("hashes")),
-        newIds, theta)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+        newIds, theta))
 
   /** Continuous containment-pair maintenance: each micro-batch appends
     * its new docs' shingle-hash rows and emits exactly the pairs
@@ -520,62 +707,36 @@ object SilverIndex {
   def streamingContainmentPairs(rows: DataFrame, idCol: String,
       textCol: String, n: Int, theta: Double, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        containmentPairsBatch(batch.toDF(), batchId, idCol, textCol, n,
-          theta, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    foreachBatchStream(rows, sigPath)(containmentPairsBatch(_, _, idCol,
+      textCol, n, theta, sigPath, pairsPath))
 
   /** Symmetric exact-Jaccard pairs served from the SAME persisted
     * shingle-hash artifact [[refreshContainmentIndex]] maintains — the
-    * d2/d13 family's maintained face (d22, r19). The stored per-doc
-    * rows are CRITERION-FREE set state (sorted distinct gram hashes +
-    * the true distinct count), so one index, refreshed once per
-    * arriving batch, answers BOTH the asymmetric containment audit
-    * ([[containmentPairsFromIndex]]) and the symmetric Jaccard audit,
-    * each at any serve-time θ — at 100 TB the corpus scan and
-    * shingling amortize across every audit criterion and threshold
-    * instead of once per (criterion, θ). Output ≡ the scratch
-    * [[graft.operators.Dedup.jaccardPairs]] row-for-row at the same
-    * (n, θ), so d2's brute-force oracle applies VERBATIM (the
-    * d18/d20 pattern — the gate's d22 entry proves it every battery).
-    * `n` must match the stored build (one-row probe raises, never
-    * silently mixes). */
+    * d2/d13 family's maintained face (d22). The stored per-doc rows
+    * are CRITERION-FREE set state (sorted distinct gram hashes + the
+    * true distinct count), so one index, refreshed once per arriving
+    * batch, answers BOTH the asymmetric containment audit and the
+    * symmetric Jaccard audit, each at any serve-time θ. Output ≡ the
+    * scratch [[graft.operators.Dedup.jaccardPairs]] row-for-row at the
+    * same (n, θ), so d2's brute-force oracle applies VERBATIM (the
+    * gate's d22 entry proves it every battery). */
   def jaccardPairsFromIndex(spark: SparkSession, path: String,
-      n: Int, theta: Double, kind: String = "word"): DataFrame = {
-    val ix = containmentIndex(spark, path)
-    probeShingleBuild(ix, path, n, kind, "serve requested")
-    graft.operators.Dedup.jaccardPairsFromStored(
-      ix.select(col("doc"), col("sz"), col("hashes")), theta)
-  }
+      n: Int, theta: Double, kind: String = "word"): DataFrame =
+    Dedup.jaccardPairsFromStored(shingleRows(spark, path, n, kind), theta)
 
-  /** One micro-batch of [[streamingJaccardPairs]] — the
-    * [[containmentPairsBatch]] transaction-intent protocol verbatim,
+  /** One micro-batch of [[streamingJaccardPairs]] — [[pairBatch]]
     * emitting the SYMMETRIC criterion's delta ([[graft.operators.Dedup
     * .jaccardPairsDelta]] — prefix order as-of-batch, union of deltas
-    * ≡ the full serve, each pair exactly once) into a per-batch
-    * OVERWRITE partition so a replay re-emits identically instead of
-    * duplicating. */
+    * ≡ the full serve, each pair exactly once). */
   private[pipeline] def jaccardPairsBatch(batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, n: Int,
-      theta: Double, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshContainmentIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, textCol, n, sigPath)
-    graft.operators.Dedup.jaccardPairsDelta(
-        containmentIndex(spark, sigPath)
+      theta: Double, sigPath: String, pairsPath: String): Unit =
+    pairBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshContainmentIndex(_, idCol, textCol, n, sigPath))(newIds =>
+      Dedup.jaccardPairsDelta(
+        containmentIndex(batch.sparkSession, sigPath)
           .select(col("doc"), col("sz"), col("hashes")),
-        newIds, theta)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+        newIds, theta))
 
   /** Continuous symmetric-Jaccard pair maintenance over the shared
     * shingle-hash artifact: each micro-batch appends its new docs'
@@ -584,50 +745,28 @@ object SilverIndex {
   def streamingJaccardPairs(rows: DataFrame, idCol: String,
       textCol: String, n: Int, theta: Double, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        jaccardPairsBatch(batch.toDF(), batchId, idCol, textCol, n,
-          theta, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    foreachBatchStream(rows, sigPath)(jaccardPairsBatch(_, _, idCol,
+      textCol, n, theta, sigPath, pairsPath))
 
   // ---------------- persisted simhash signature index (d25, r19)
 
   /** Bring the 64-bit SimHash signature table (doc, simhash, n) at
     * `path` up to date with `df` — the persisted face of
-    * [[graft.operators.Dedup.simhashPairs]] (the last pair family
-    * recomputing per-doc state per audit after d20/d22 landed). The
-    * signature is a pure per-doc function of the text
-    * ([[graft.operators.Dedup.simhashDocs]]), so the id-anti-join
-    * refresh is delta ≡ scratch EXACTLY; the stored `n` column pins
-    * the build's shingle width (the d18/d20 one-row probe). The
-    * artifact is DISTANCE-FREE (the theta-free stance's Hamming
-    * sibling): `maxDist`, and the pigeonhole chunking it sizes, are
-    * pure serve-time choices over the stored 8-byte signatures —
-    * nothing distance-shaped is stored, so one index answers any
-    * audit radius. Erasure: [[eraseSimhashIndex]] (p6). */
+    * [[graft.operators.Dedup.simhashPairs]]. The signature is a pure
+    * per-doc function of the text ([[graft.operators.Dedup
+    * .simhashDocs]]), so the refresh is delta ≡ scratch EXACTLY; the
+    * stored `n` column pins the build's shingle width (the one-row
+    * stamp probe). The artifact is DISTANCE-FREE: `maxDist`, and the
+    * pigeonhole chunking it sizes, are pure serve-time choices over the
+    * stored 8-byte signatures, so one index answers any audit radius.
+    * Erasure: [[eraseSimhashIndex]] (p6). */
   def refreshSimhashIndex(df: DataFrame, idCol: String,
       textCol: String, shingleN: Int, path: String): Refresh = {
-    val spark = df.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach { ix =>
-      ix.select(col("n")).limit(1).collect().headOption.foreach { r =>
-        require(r.isNullAt(0) || r.getInt(0) == shingleN,
-          s"simhash index at $path was built at n=${r.get(0)}, " +
-            s"refresh requested $shingleN — rebuild, don't mix")
-      }
-    }
-    val newDocs = existing.fold(df)(ix => df.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(
-      graft.operators.Dedup.simhashDocs(newDocs, idCol, textCol,
-          shingleN)
-        .withColumn("n", lit(shingleN)),
-      path, Nil, before)
+    val ix = new PerDocArtifact(df.sparkSession, path)
+    ix.probe("simhash index", col("n"), "n", shingleN)
+    ix.append(Dedup.simhashDocs(ix.unseen(df, idCol), idCol, textCol,
+        shingleN)
+      .withColumn("n", lit(shingleN)))
   }
 
   /** The stored signature table: (doc, simhash, n). */
@@ -636,49 +775,34 @@ object SilverIndex {
 
   /** [[graft.operators.Dedup.simhashPairs]] served from the PERSISTED
     * signature table — zero text read, zero shingling/signature
-    * recompute at audit time; `maxDist` is a serve-time choice (the
-    * artifact stores only the signature). Output ≡ the scratch
-    * operator row-for-row at the same (shingleN, maxDist) — the
-    * banding and the exact Hamming filter run the same
+    * recompute at audit time; `maxDist` is a serve-time choice. Output
+    * ≡ the scratch operator row-for-row at the same (shingleN, maxDist)
+    * — the banding and the exact Hamming filter run the same
     * [[graft.operators.Dedup.hammingPairs]] plan over identical
     * signatures, so the gate's d25 entry carries d4's golden content
     * hash VERBATIM. */
   def simhashPairsFromIndex(spark: SparkSession, path: String,
       shingleN: Int, maxDist: Int): DataFrame = {
     val ix = simhashIndex(spark, path)
-    ix.select(col("n")).limit(1).collect().headOption.foreach { r =>
-      require(r.isNullAt(0) || r.getInt(0) == shingleN,
-        s"simhash index at $path was built at n=${r.get(0)}, " +
-          s"serve requested $shingleN")
-    }
-    graft.operators.Dedup.hammingPairs(
-      ix.select(col("doc"), col("simhash")), maxDist)
+    requireStamp(ix, path, "simhash index", col("n"), "n", shingleN,
+      "serve requested")
+    Dedup.hammingPairs(ix.select(col("doc"), col("simhash")), maxDist)
   }
 
-  /** One micro-batch of [[streamingSimhashPairs]] — the
-    * [[containmentPairsBatch]] transaction-intent protocol verbatim
-    * over signature rows, emitting exactly the Hamming pairs touching
-    * this batch's new docs ([[graft.operators.Dedup
-    * .hammingPairsDelta]] — chunk buckets are corpus-state-free, so
-    * the union of deltas ≡ the full serve, each pair exactly once)
-    * into a per-batch OVERWRITE partition so a replay re-emits
-    * identically. */
+  /** One micro-batch of [[streamingSimhashPairs]] — [[pairBatch]] over
+    * signature rows, emitting exactly the Hamming pairs touching this
+    * batch's new docs ([[graft.operators.Dedup.hammingPairsDelta]] —
+    * chunk buckets are corpus-state-free, so the union of deltas ≡ the
+    * full serve, each pair exactly once). */
   private[pipeline] def simhashPairsBatch(batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, shingleN: Int,
-      maxDist: Int, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshSimhashIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, textCol, shingleN, sigPath)
-    graft.operators.Dedup.hammingPairsDelta(
-        simhashIndex(spark, sigPath).select(col("doc"), col("simhash")),
-        newIds, maxDist)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+      maxDist: Int, sigPath: String, pairsPath: String): Unit =
+    pairBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshSimhashIndex(_, idCol, textCol, shingleN, sigPath))(newIds =>
+      Dedup.hammingPairsDelta(
+        simhashIndex(batch.sparkSession, sigPath)
+          .select(col("doc"), col("simhash")),
+        newIds, maxDist))
 
   /** Continuous simhash-pair maintenance: each micro-batch appends its
     * new docs' signatures and emits exactly the Hamming pairs
@@ -687,14 +811,8 @@ object SilverIndex {
   def streamingSimhashPairs(rows: DataFrame, idCol: String,
       textCol: String, shingleN: Int, maxDist: Int, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        simhashPairsBatch(batch.toDF(), batchId, idCol, textCol,
-          shingleN, maxDist, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    foreachBatchStream(rows, sigPath)(simhashPairsBatch(_, _, idCol,
+      textCol, shingleN, maxDist, sigPath, pairsPath))
 
   /** p6 staged-swap erasure for the simhash signature table. */
   def eraseSimhashIndex(spark: SparkSession, path: String,
@@ -706,80 +824,54 @@ object SilverIndex {
   private def semVecsPath(path: String) = s"${path.stripSuffix("/")}__vecs"
 
   /** Bring the banded semantic-decontam index at `path` up to date
-    * with `train` — the persisted face [[graft.operators.Dedup
-    * .crossCosinePairsLsh]] lacked (VERDICT r17 task 2, the d7/m9/d18
-    * id-anti-join discipline): c30's banded path recomputed every
-    * train-side hyperplane signature per audit, while its exact
-    * sibling served from the stream-maintained postings (s16). `train`
-    * is the [[graft.operators.TextSearch.hashingTfIdf]] triple shape
-    * under a FROZEN vectorizer fit (the [[refreshIvf]] frozen-
-    * quantizer stance: signatures are deterministic per doc GIVEN the
-    * fit, which is what makes delta ≡ scratch exact — re-fitting the
-    * IDF means rebuild, the same contract as a re-trained quantizer).
+    * with `train` — the persisted face of [[graft.operators.Dedup
+    * .crossCosinePairsLsh]]: c30's banded path recomputed every
+    * train-side hyperplane signature per audit. `train` is the
+    * [[graft.operators.TextSearch.hashingTfIdf]] triple shape under a
+    * FROZEN vectorizer fit (the [[refreshIvf]] frozen-quantizer stance:
+    * signatures are deterministic per doc GIVEN the fit, which is what
+    * makes delta ≡ scratch exact — re-fitting the IDF means rebuild).
     *
-    * Two tables: `path` holds the signature rows (doc, tbl, sig, bits,
-    * tables, dim — the config columns pin the build, uniform by the
-    * append-only discipline, so ONE row exposes a mismatch: the d18
-    * probe), `path`__vecs the per-doc sorted sparse vectors (doc,
-    * buckets, weights) the serve-time exact verify reads.
+    * Two PerDocArtifact tables: `path` holds the signature rows (doc,
+    * tbl, sig, bits, tables, dim — the config columns are the stamp),
+    * `path`__vecs the per-doc sorted sparse vectors (doc, buckets,
+    * weights) the serve-time exact verify reads.
     *
-    * TWO-TABLE COMMIT (VERDICT r18 "what's wrong" #2 — the
-    * transaction-intent alignment): a `_refresh_intent` marker under
-    * `path` commits BEFORE the first append and clears after the
-    * second, so the crash window between the two table writes is
-    * OBSERVABLE ([[semanticLshRefreshPending]]) instead of silent.
-    * Convergence never depended on the marker: each table's append
-    * anti-joins on ITS OWN doc set, so both appends are individually
-    * idempotent at doc grain and every crash window replays clean —
-    * vectors append FIRST, so a crash between the writes leaves vec
-    * rows whose doc has no signatures yet (invisible to the collision
-    * join, and the inner verify join cannot drop a candidate the
-    * collision join never produced), and the NEXT refresh re-derives
-    * exactly the missing signature rows (the sig-side anti-join still
-    * lists the doc as new; the vec-side anti-join skips it, no
-    * duplicate rows that would double verify pairs). SilverIndexSpec's
-    * crash-window case hand-builds the half-state and pins the heal.
-    * Weekly-audit serve is [[semanticPairsFromIndex]]; erasure
-    * [[eraseSemanticLsh]]. */
+    * TWO-TABLE COMMIT: a `_refresh_intent` marker under `path` commits
+    * BEFORE the first append and clears after the second, so the crash
+    * window between the two table writes is OBSERVABLE
+    * ([[semanticLshRefreshPending]]) instead of silent. Convergence
+    * never depended on the marker: each table's append anti-joins on
+    * ITS OWN doc set, so both appends are individually idempotent at
+    * doc grain and every crash window replays clean — vectors append
+    * FIRST, so a crash between the writes leaves vec rows whose doc has
+    * no signatures yet (invisible to the collision join), and the NEXT
+    * refresh re-derives exactly the missing signature rows.
+    * SilverIndexSpec's crash-window case hand-builds the half-state and
+    * pins the heal. Weekly-audit serve is [[semanticPairsFromIndex]];
+    * erasure [[eraseSemanticLsh]]. */
   def refreshSemanticLsh(train: DataFrame, dim: Int, bits: Int,
       tables: Int, path: String): Refresh = {
     val spark = train.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach { ix =>
-      ix.select(col("bits"), col("tables"), col("dim")).limit(1)
-        .collect().headOption.foreach { r =>
-          require(r.getInt(0) == bits && r.getInt(1) == tables &&
-            r.getInt(2) == dim,
-            s"semantic index at $path was built at (bits=${r.getInt(0)}, " +
-              s"tables=${r.getInt(1)}, dim=${r.getInt(2)}), refresh " +
-              s"requested ($bits, $tables, $dim) — rebuild, don't mix")
-        }
-    }
-    val newTriples = existing.fold(train)(ix =>
-      train.join(ix.select(col("doc")).distinct(), Seq("doc"), "left_anti"))
+    val sig = new PerDocArtifact(spark, path)
+    sig.probe("semantic index",
+      concat_ws(",", col("bits"), col("tables"), col("dim")),
+      "(bits,tables,dim)", s"$bits,$tables,$dim")
     // feeds both table writes — batch-sized by the anti-join
-    val vecs = graft.operators.Dedup
-      .sparseDocVectors(newTriples, dim, "refreshSemanticLsh")
-      .localCheckpoint(true)
+    val vecs = Dedup.sparseDocVectors(sig.unseen(train, "doc"), dim,
+      "refreshSemanticLsh").localCheckpoint(true)
     // intent marker: single-file create is the atomic commit point (a
     // leading underscore keeps it invisible to hasDataFiles/dataStats)
-    val fs = new Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(spark, path)
     fs.create(semIntentPath(path), true).close()
-    val vdir = semVecsPath(path)
-    val existingV = readIfData(spark, vdir)
-    val newVecs = existingV.fold(vecs)(vx =>
-      vecs.join(vx.select(col("doc")).distinct(), Seq("doc"), "left_anti"))
-    appendCounted(newVecs, vdir, Nil,
-      existingRows(spark, vdir, existingV))
-    val sigs = vecs.withColumn("__bk", explode(
-        graft.operators.AnnSearch.sparseTableSigs(
-          col("buckets"), col("weights"), bits, tables)))
+    val vec = new PerDocArtifact(spark, semVecsPath(path))
+    vec.append(vec.unseen(vecs, "doc"))
+    val r = sig.append(vecs.withColumn("__bk", explode(
+        AnnSearch.sparseTableSigs(col("buckets"), col("weights"), bits,
+          tables)))
       .select(col("doc"), col("__bk.tbl").as("tbl"),
         col("__bk.sig").as("sig"), lit(bits).as("bits"),
-        lit(tables).as("tables"), lit(dim).as("dim"))
-    val r = appendCounted(sigs, path, Nil,
-      existingRows(spark, path, existing))
+        lit(tables).as("tables"), lit(dim).as("dim")))
     fs.delete(semIntentPath(path), false)
     r
   }
@@ -795,10 +887,8 @@ object SilverIndex {
     * an operator (and the crash-window spec) can OBSERVE the window
     * rather than infer it from row-count forensics. */
   def semanticLshRefreshPending(spark: SparkSession,
-      path: String): Boolean = {
-    val p = semIntentPath(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+      path: String): Boolean =
+    fsOf(spark, path).exists(semIntentPath(path))
 
   /** The signature table as stored: (doc, tbl, sig, bits, tables, dim). */
   def semanticLshIndex(spark: SparkSession, path: String): DataFrame =
@@ -838,10 +928,9 @@ object SilverIndex {
     // the eval side feeds two consumers (banding + verify) — bound the
     // cache by call site (the c28 semanticW discipline)
     val ev = graft.ManagedCache.swap("SilverIndex.semanticEval",
-      graft.operators.Dedup.sparseDocVectors(evalTriples, dim,
-        "semanticPairsFromIndex"))
+      Dedup.sparseDocVectors(evalTriples, dim, "semanticPairsFromIndex"))
     val evSigs = ev.withColumn("__bk", explode(
-        graft.operators.AnnSearch.sparseTableSigs(
+        AnnSearch.sparseTableSigs(
           col("buckets"), col("weights"), bits, tables)))
       .select(col("doc").as("eval_doc"), col("__bk.tbl").as("tbl"),
         col("__bk.sig").as("sig"))
@@ -867,34 +956,25 @@ object SilverIndex {
       .where(col("cosine") >= theta)
   }
 
-  /** One micro-batch of [[streamingSemanticPairs]] — the
-    * transaction-intent protocol verbatim over hyperplane signatures
-    * (the [[editPairsBatch]] shape): intent (same crash windows, same
-    * stage-then-rename commit), signature+vector append for the
-    * intent's new docs only, then exactly the pairs whose TRAIN doc is
-    * new (the eval side is a frozen benchmark frame, so train-only
+  /** One micro-batch of [[streamingSemanticPairs]] — [[pairBatch]] over
+    * hyperplane signatures, emitting exactly the pairs whose TRAIN doc
+    * is new (the eval side is a frozen benchmark frame, so train-only
     * growth makes the union of deltas ≡ the full serve EXACTLY —
     * signatures are per-doc deterministic under the frozen fit, and a
     * pair exists iff its train doc collides, which is decided the
-    * batch that doc arrives) into a per-batch OVERWRITE partition so
-    * a replay re-emits identically. */
+    * batch that doc arrives). */
   private[pipeline] def semanticPairsBatch(batch: DataFrame,
       batchId: Long, evalTriples: DataFrame, theta: Double, dim: Int,
-      bits: Int, tables: Int, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col("doc")).distinct())
-    refreshSemanticLsh(
-      batch.join(newIds, Seq("doc"), "left_semi"),
-      dim, bits, tables, sigPath)
-    val sigs = semanticLshIndex(spark, sigPath)
-      .join(newIds, Seq("doc"), "left_semi")
-    val vecs = spark.read.parquet(semVecsPath(sigPath))
-      .join(newIds, Seq("doc"), "left_semi")
-    semanticPairsOver(sigs, vecs, evalTriples, theta, dim, bits, tables)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+      bits: Int, tables: Int, sigPath: String, pairsPath: String): Unit =
+    pairBatch(batch, batchId, "doc", sigPath, pairsPath)(
+      refreshSemanticLsh(_, dim, bits, tables, sigPath)) { newIds =>
+      val spark = batch.sparkSession
+      semanticPairsOver(
+        semanticLshIndex(spark, sigPath).join(newIds, Seq("doc"), "left_semi"),
+        spark.read.parquet(semVecsPath(sigPath))
+          .join(newIds, Seq("doc"), "left_semi"),
+        evalTriples, theta, dim, bits, tables)
+    }
 
   /** Continuous banded semantic-decontam maintenance: each micro-batch
     * of train-side TF-IDF triples (under the frozen fit) appends its
@@ -902,32 +982,23 @@ object SilverIndex {
     * pairs involving them (the s6 exactly-once pair contract — d18's
     * streaming face, one ring out: s19).
     *
-    * EVAL-APPEND CONTRACT (VERDICT r18 "what's missing" #2): each
-    * train doc is checked against the eval set AS OF THE BATCH IT
-    * ARRIVES — correct while the benchmark is frozen, but a benchmark
-    * APPENDED mid-stream is never checked against already-arrived
-    * train docs by this stream alone. The recovery is ONE
-    * [[semanticPairsFromIndex]] serve over the eval DELTA: it bands
-    * only the appended eval docs (eval-delta-sized — the stored train
-    * signatures are read, never recomputed) against the whole index,
-    * and the union of the accumulated stream pairs with that serve
-    * equals the full serve over the grown benchmark EXACTLY
-    * (signatures are per-doc deterministic under the frozen fit, so a
-    * pair exists iff its train doc's stored signature collides with
+    * EVAL-APPEND CONTRACT: each train doc is checked against the eval
+    * set AS OF THE BATCH IT ARRIVES — correct while the benchmark is
+    * frozen, but a benchmark APPENDED mid-stream is never checked
+    * against already-arrived train docs by this stream alone. The
+    * recovery is ONE [[semanticPairsFromIndex]] serve over the eval
+    * DELTA: it bands only the appended eval docs against the whole
+    * index, and the union of the accumulated stream pairs with that
+    * serve equals the full serve over the grown benchmark EXACTLY
+    * (a pair exists iff its train doc's stored signature collides with
     * its eval doc's — independent of WHEN either side arrived).
     * Restart the stream with the grown eval frame for later batches;
     * SilverIndexSpec's eval-append case pins the recipe. */
   def streamingSemanticPairs(rows: DataFrame, evalTriples: DataFrame,
       theta: Double, dim: Int, bits: Int, tables: Int, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        semanticPairsBatch(batch.toDF(), batchId, evalTriples, theta,
-          dim, bits, tables, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    foreachBatchStream(rows, sigPath)(semanticPairsBatch(_, _, evalTriples,
+      theta, dim, bits, tables, sigPath, pairsPath))
 
   /** Erasure for the banded semantic index (the p6 path): the
     * subject's signature AND vector rows drop, so
@@ -949,18 +1020,13 @@ object SilverIndex {
     * indexed, and append. Per-document deterministic (tokenize + per-doc
     * term counts), so incremental == from-scratch exactly — and the BM25
     * *statistics* (N, avg length, per-term df) are derived from the
-    * postings at query time, so they stay consistent with the appended
-    * corpus for free; nothing global needs recomputing on refresh.
-    * Append-only like the others: a deleted or edited document means
-    * rebuild (or version the path). */
+    * postings and the doc-length companion, so they stay consistent
+    * with the appended corpus; nothing global needs recomputing. */
   def refreshPostings(docs: DataFrame, idCol: String, textCol: String,
       path: String): Refresh = {
     val spark = docs.sparkSession
-    val existing = readIfData(spark, path)
-    val newDocs = existing.fold(docs)(ix => docs.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol), "left_anti"))
-    val before = existingRows(spark, path, existing)
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val ix = new PerDocArtifact(spark, path)
+    val fs = fsOf(spark, path)
     // was the doclen companion in sync BEFORE this append? (valid meta =
     // fast incremental path; anything else → one idempotent rebuild)
     val auxBefore = readBm25Meta(fs, path)
@@ -975,27 +1041,24 @@ object SilverIndex {
     // [[readBm25Meta]] fingerprint check detects (meta not yet written →
     // stale) and [[ensureBm25Aux]] rebuilds wholesale.
     val newPost = graft.ManagedCache.swap("SilverIndex.refreshPostings",
-      TextSearch.postings(newDocs, idCol, textCol))
-    val r = auxBefore match {
-      case Some(st) =>
-        val obs = org.apache.spark.sql.Observation()
-        newPost.groupBy("doc").agg(sum(col("tf")).as("len"))
-          .observe(obs, count(lit(1)).as("n"),
-            coalesce(sum(col("len")), lit(0L)).as("s"))
-          .write.mode("append").parquet(doclenPath(path))
-        // term-sorted within each file: a driver-known query's pushed
-        // In(term, …) predicate then skips row groups by min/max stats
-        val r0 = appendCounted(newPost, path, Nil, before,
-          shape = _.sortWithinPartitions(col("term")))
+      TextSearch.postings(ix.unseen(docs, idCol), idCol, textCol))
+    val doclen = auxBefore.map { st =>
+      val obs = org.apache.spark.sql.Observation()
+      newPost.groupBy("doc").agg(sum(col("tf")).as("len"))
+        .observe(obs, count(lit(1)).as("n"),
+          coalesce(sum(col("len")), lit(0L)).as("s"))
+        .write.mode("append").parquet(doclenPath(path))
+      (st, obs)
+    }
+    // term-sorted within each file: a driver-known query's pushed
+    // In(term, …) predicate then skips row groups by min/max stats
+    val r = ix.append(newPost, shape = _.sortWithinPartitions(col("term")))
+    doclen match {
+      case Some((st, obs)) =>
         writeBm25Meta(fs, path, Bm25Stats(
           st.docs + obs.get("n").asInstanceOf[Long],
           st.totalLen + obs.get("s").asInstanceOf[Long]))
-        r0
-      case None =>
-        val r0 = appendCounted(newPost, path, Nil, before,
-          shape = _.sortWithinPartitions(col("term")))
-        ensureBm25Aux(spark, path)
-        r0
+      case None => ensureBm25Aux(spark, path)
     }
     graft.ManagedCache.release("SilverIndex.refreshPostings")
     r
@@ -1023,42 +1086,27 @@ object SilverIndex {
     * the sidecar write AND postings unchanged since the doclen sync) —
     * a crash between the postings append and the doclen append, a
     * legacy index, or out-of-band writes all invalidate it. */
-  private def readBm25Meta(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[Bm25Stats] = {
-    val f = bm25MetaFile(path)
-    if (!fs.exists(f)) return None
-    try {
-      val in = fs.open(f)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val kv = txt.stripPrefix("{").stripSuffix("}").split(",").map { p =>
-        val Array(k, v) = p.split(":", 2)
-        k.trim.stripPrefix("\"").stripSuffix("\"") ->
-          v.trim.stripPrefix("\"").stripSuffix("\"")
-      }.toMap
-      if (kv("doclen_fp") == fingerprint(fs, doclenPath(path)) &&
-          kv("post_fp") == fingerprint(fs, path))
-        Some(Bm25Stats(kv("docs").toLong, kv("total_len").toLong))
-      else None
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private def readBm25Meta(fs: FileSystem, path: String): Option[Bm25Stats] =
+    readSidecar(fs, bm25MetaFile(path))
+      .filter(kv =>
+        kv.get("doclen_fp").contains(fingerprint(fs, doclenPath(path))) &&
+          kv.get("post_fp").contains(fingerprint(fs, path)))
+      .flatMap(kv => scala.util.Try(
+        Bm25Stats(kv("docs").toLong, kv("total_len").toLong)).toOption)
 
-  private def writeBm25Meta(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, st: Bm25Stats): Unit = {
-    val dlFp = fingerprint(fs, doclenPath(path))
-    val pFp = fingerprint(fs, path)
-    val out = fs.create(bm25MetaFile(path), true)
-    try out.write((s"""{"docs":${st.docs},"total_len":${st.totalLen},""" +
-      s""""doclen_fp":"$dlFp","post_fp":"$pFp"}""").getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeBm25Meta(fs: FileSystem, path: String,
+      st: Bm25Stats): Unit =
+    writeSidecar(fs, bm25MetaFile(path),
+      s"""{"docs":${st.docs},"total_len":${st.totalLen},""" +
+        s""""doclen_fp":"${fingerprint(fs, doclenPath(path))}",""" +
+        s""""post_fp":"${fingerprint(fs, path)}"}""")
 
   /** Doc-length companion + stats, rebuilt wholesale from the postings
     * whenever the sidecar can't prove freshness — ONE idempotent
     * recovery path covers legacy indexes, crashes between the two
     * appends, and out-of-band writes. */
   private def ensureBm25Aux(spark: SparkSession, path: String): Bm25Stats = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(spark, path)
     readBm25Meta(fs, path).getOrElse {
       spark.read.parquet(path)
         .groupBy("doc").agg(sum(col("tf")).as("len"))
@@ -1123,22 +1171,20 @@ object SilverIndex {
       queries, idCol, textCol, k, k1, b)
   }
 
+  /** [[streamingRefresh]] pre-wired to [[refreshPostings]]. */
+  def streamingRefreshPostings(docs: DataFrame, idCol: String,
+      textCol: String, path: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamingRefresh(docs, path)(refreshPostings(_, idCol, textCol, path))
+
   // -------------------------------------------------------------------- IVF
 
   private def centPath(path: String) = s"$path/centroids"
   private def asgPath(path: String) = s"$path/assigned"
 
-  /** Per-path cache of the FROZEN quantizer rows, keyed by the centroid
-    * dir's data-file fingerprint: the quantizer freezes at first build
-    * (the IVF append discipline), yet every delta refresh and every
-    * probe re-read + re-collected its ≤ nlist rows from parquet — two
-    * extra jobs per a6-shaped run. The fingerprint (files:bytes) makes a
-    * re-trained index (dir deleted + rebuilt) a cache miss, never a
-    * stale hit. Values are driver Rows (KBs at any realistic nlist·dim). */
-  /** Access-ordered LRU for the driver-side frozen-quantizer caches
-    * (ADVICE-class, VERDICT r17 "what's wrong" #2): entries are small
-    * (nlist / m·ksub rows) but were never evicted, so a long-lived
-    * serving session touching many indexes accumulated them forever.
+  /** Access-ordered LRU for the driver-side frozen-quantizer caches:
+    * entries are small (nlist / m·ksub rows) but a long-lived serving
+    * session touching many indexes must not accumulate them forever.
     * Capacity is re-read per insert from `graft.silverindex.cacheCap`
     * (default 64 entries — generous for any realistic index fan-out;
     * the property exists so the eviction+reload path is spec-testable
@@ -1151,8 +1197,8 @@ object SilverIndex {
     private def cap: Int =
       // a malformed property value must degrade to the default, not
       // throw NumberFormatException from the cache-insert path of a
-      // serving query (ADVICE r18); non-positive values are equally
-      // malformed (the eviction loop floors at 1 regardless)
+      // serving query; non-positive values are equally malformed (the
+      // eviction loop floors at 1 regardless)
       sys.props.get("graft.silverindex.cacheCap")
         .flatMap(v => scala.util.Try(v.toInt).toOption)
         .filter(_ >= 1).getOrElse(64)
@@ -1165,16 +1211,21 @@ object SilverIndex {
     }
   }
 
+  /** Per-path cache of the FROZEN quantizer rows, keyed by the centroid
+    * dir's data-file fingerprint: the quantizer freezes at first build
+    * (the IVF append discipline), yet every delta refresh and every
+    * probe would otherwise re-read + re-collect its ≤ nlist rows from
+    * parquet — two extra jobs per a6-shaped run. The fingerprint makes
+    * a re-trained index (dir deleted + rebuilt) a cache miss, never a
+    * stale hit. Values are driver Rows (KBs at any realistic
+    * nlist·dim). */
   private val centCache = new DriverLru[
-    (String, Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType)]
+    (String, Array[Row], org.apache.spark.sql.types.StructType)]
 
   private def loadCents(spark: SparkSession, path: String): DataFrame = {
     val dir = centPath(path)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fingerprint(fs, dir)
-    val hit = centCache.get(dir)
-    val (rows, schema) = hit match {
+    val fp = fingerprint(fsOf(spark, dir), dir)
+    val (rows, schema) = centCache.get(dir) match {
       case Some((hfp, r, sch)) if hfp == fp => (r, sch)
       case _ =>
         val df = spark.read.parquet(dir)
@@ -1185,48 +1236,47 @@ object SilverIndex {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Seed the cache from a just-written build — the builder already holds
-    * the rows driver-side. */
-  private def cacheCents(spark: SparkSession, path: String,
-      built: DataFrame): Unit = {
-    val dir = centPath(path)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    centCache.put(dir, (fingerprint(fs, dir), built.collect(), built.schema))
-  }
+  /** The frozen coarse quantizer of the index at `path`: loaded when the
+    * centroid dir has data files, else trained on `c` (hash-sampled
+    * seeds + one Lloyd pass, [[AnnSearch.ivfCentroids]]), persisted,
+    * and cached from the rows the builder already holds. A centroid dir
+    * without data files means the quantizer was "built" on an empty
+    * corpus (e.g. a quiet first streaming micro-batch) — it trains for
+    * real on the first non-empty one. */
+  private def frozenCents(spark: SparkSession, c: DataFrame, nlist: Int,
+      path: String): DataFrame =
+    if (hasDataFiles(spark, centPath(path))) loadCents(spark, path)
+    else {
+      val built = AnnSearch.ivfCentroids(c, nlist)
+      built.write.mode("overwrite").parquet(centPath(path))
+      centCache.put(centPath(path), (fingerprint(fsOf(spark, path),
+        centPath(path)), built.collect(), built.schema))
+      built
+    }
 
   /** Bring the IVF index at `path` up to date with `corpus`. First call
-    * builds + persists the quantizer (hash-sampled seeds + one Lloyd
-    * pass, [[AnnSearch.ivfCentroids]]); later calls FREEZE it and only
-    * assign-and-append vectors whose ids are not yet indexed. The
-    * assignment table is partitioned by `list_id`, so probe-time reads
-    * prune to nprobe/nlist of the files. */
+    * builds + persists the quantizer ([[frozenCents]]); later calls
+    * FREEZE it and only assign-and-append vectors whose ids are not yet
+    * indexed — the standard IVF append discipline, so incremental ==
+    * from-scratch with the same centroids, exactly. The assignment
+    * table is partitioned by `list_id`, so probe-time reads prune to
+    * nprobe/nlist of the files. Re-quantize by deleting the index dir
+    * when drift warrants ([[maintainIvf]] measures it). */
   def refreshIvf(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, path: String): Refresh = {
     val spark = corpus.sparkSession
     val c = AnnSearch.ivfCorpus(corpus, idCol, vecCol)
-    // a centroids dir without data files means the quantizer was "built"
-    // on an empty corpus (e.g. a quiet first streaming micro-batch) —
-    // train it for real on the first non-empty one
-    val cents =
-      if (hasDataFiles(spark, centPath(path))) loadCents(spark, path)
-      else {
-        val built = AnnSearch.ivfCentroids(c, nlist)
-        built.write.mode("overwrite").parquet(centPath(path))
-        cacheCents(spark, path, built)
-        built
-      }
-    val existing = readIfData(spark, asgPath(path))
-    val newC = existing.fold(c)(ix =>
-      c.join(ix.select(col("neighbor_id")), Seq("neighbor_id"), "left_anti"))
-    val before = existingRows(spark, asgPath(path), existing)
+    val cents = frozenCents(spark, c, nlist, path)
+    val ix = new PerDocArtifact(spark, asgPath(path), "neighbor_id",
+      oneRowPerId = true)
     // co-locate each list's rows before the partitioned write: without
     // it every input task emits a file into every list dir (tasks ×
     // nlist tiny files), which the anti-join listing and every probe
     // read then pay for. One narrow shuffle of (id, cv, list_id) rows
     // buys one file per (task, list) with AQE coalescing — at cluster
     // scale, add more write tasks, not more files per list.
-    appendCounted(AnnSearch.ivfAssign(newC, cents), asgPath(path),
-      Seq("list_id"), before, shape = _.repartition(col("list_id")))
+    ix.append(AnnSearch.ivfAssign(ix.unseen(c, "neighbor_id"), cents),
+      Seq("list_id"), _.repartition(col("list_id")))
   }
 
   /** The persisted assignment, shaped for
@@ -1254,7 +1304,7 @@ object SilverIndex {
       k, nprobe)
   }
 
-  /** Metadata-FILTERED ANN against the persisted IVF index (r12): the
+  /** Metadata-FILTERED ANN against the persisted IVF index: the
     * vector-database "filtered search" semantics — top-k among only the
     * members whose id appears in `eligible` (an attribute predicate
     * resolved to an id frame by the caller: `labels.where(...)`). This
@@ -1262,14 +1312,10 @@ object SilverIndex {
     * composes as a semi-join into the assignment table BEFORE any
     * scoring, so candidates are (probed lists ∩ eligible) — never
     * score-then-discard, which silently returns < k eligible rows when
-    * the top-k is filter-heavy. The semi-join rides the same
-    * partition-pruned read the unfiltered path uses; at 10¹¹ vectors
-    * `eligible` is itself an indexed attribute scan and the semi-join
-    * hash-partitions on the 8-byte id. Results are exactly
-    * `ivfTopKFromIndex` over a corpus restricted to the eligible rows
-    * under the SAME frozen quantizer (the assignment is per-row;
-    * SilverIndexSpec pins subset + recall vs the filtered brute
-    * baseline). */
+    * the top-k is filter-heavy. Results are exactly `ivfTopKFromIndex`
+    * over a corpus restricted to the eligible rows under the SAME
+    * frozen quantizer (SilverIndexSpec pins subset + recall vs the
+    * filtered brute baseline). */
   def ivfTopKFromIndexWhere(queries: DataFrame, idCol: String,
       vecCol: String, path: String, k: Int, nprobe: Int,
       eligible: DataFrame, eligibleIdCol: String): DataFrame = {
@@ -1281,6 +1327,14 @@ object SilverIndex {
       Seq("neighbor_id"), "left_semi")
     AnnSearch.ivfTopKFromAssigned(q0, members, cents, k, nprobe)
   }
+
+  /** [[streamingRefresh]] pre-wired to [[refreshIvf]] (first batch
+    * trains and freezes the quantizer, later batches assign-and-append
+    * — the standard IVF append discipline under streaming arrival). */
+  def streamingRefreshIvf(docs: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, path: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamingRefresh(docs, path)(refreshIvf(_, idCol, vecCol, nlist, path))
 
   // ----------------------------------------------------------------- IVF-PQ
 
@@ -1312,16 +1366,9 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val c = AnnSearch.ivfCorpus(corpus, idCol, vecCol)
     val sub = AnnSearch.pqSubDim(c, m)
-    val cents =
-      if (hasDataFiles(spark, centPath(path))) loadCents(spark, path)
-      else {
-        val built = AnnSearch.ivfCentroids(c, nlist)
-        built.write.mode("overwrite").parquet(centPath(path))
-        cacheCents(spark, path, built)
-        built
-      }
+    val cents = frozenCents(spark, c, nlist, path)
     val books =
-      if (readIfData(spark, bookPath(path)).isDefined)
+      if (hasDataFiles(spark, bookPath(path)))
         loadCodebooks(spark, path, m, sub)
       else {
         // codebooks train on what they will encode: the residuals
@@ -1337,11 +1384,9 @@ object SilverIndex {
           .write.mode("overwrite").parquet(bookPath(path))
         frames.map(AnnSearch.centMatrix)
       }
-    val existing = readIfData(spark, codesPath(path))
-    val newC = existing.fold(c)(ix =>
-      c.join(ix.select(col("neighbor_id")), Seq("neighbor_id"), "left_anti"))
-    val before = existingRows(spark, codesPath(path), existing)
-    val coded = AnnSearch.ivfAssign(newC, cents)
+    val ix = new PerDocArtifact(spark, codesPath(path), "neighbor_id",
+      oneRowPerId = true)
+    val coded = AnnSearch.ivfAssign(ix.unseen(c, "neighbor_id"), cents)
       .join(broadcast(cents), "list_id")
       .withColumn("codes", AnnSearch.pqEncode(
         graft.functions.VectorFunctions.sub(col("cv"), col("centv")),
@@ -1350,8 +1395,8 @@ object SilverIndex {
         AnnSearch.pqReconNorm2(col("centv"), col("codes"), books, sub)
           .as("rnorm2"),
         col("list_id"))
-    appendCounted(coded, codesPath(path), Seq("list_id"), before,
-      shape = _.repartition(col("list_id"))) // one file per (task, list) — see refreshIvf
+    // one file per (task, list) — see refreshIvf
+    ix.append(coded, Seq("list_id"), _.repartition(col("list_id")))
   }
 
   /** Per-path cache of the FROZEN codebook rows (the centCache pattern):
@@ -1359,26 +1404,16 @@ object SilverIndex {
     * filtered collects — m+2 driver actions on every recurring
     * from-index query against a table that froze at first build. */
   private val bookCache = new DriverLru[
-    (String, Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.DataType)]
+    (String, Array[Row], org.apache.spark.sql.types.DataType)]
 
-  /** The frozen per-subspace codebooks reloaded as the kernel matrices:
-    * filtering each subspace and re-running [[AnnSearch.centMatrix]]
-    * reproduces the code → matrix-row mapping exactly (list_id-ascending
-    * ordering, same driver-side widening — here via the sorted-rows
-    * entry point on the cached driver rows). Widths are validated
-    * against the refresh parameters so a mismatched re-run fails
-    * loudly. */
   /** The fingerprint-validated book rows (shared by [[loadCodebooks]]
     * and the [[bookShape]] stat derivation — one collect per (JVM,
     * frozen-books fingerprint), after which every from-index query is
     * driver-side on the cached rows). */
   private def loadBookRows(spark: SparkSession, path: String)
-      : (Array[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.DataType) = {
+      : (Array[Row], org.apache.spark.sql.types.DataType) = {
     val dir = bookPath(path)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fingerprint(fs, dir)
+    val fp = fingerprint(fsOf(spark, dir), dir)
     bookCache.get(dir) match {
       case Some((hfp, r, t)) if hfp == fp => (r, t)
       case _ =>
@@ -1391,14 +1426,10 @@ object SilverIndex {
     }
   }
 
-  /** (m, sub) of a stored codebook table, from the cached rows — the
-    * stats-sidecar answer to the per-call `countDistinct(subspace),
-    * max(size(centv))` probe JOB the r11 from-index query path ran
-    * (VERDICT r11 task 8: no stat probe on a path whose sidecar already
-    * knows the shape). */
-  private def bookShape(
-      rows: Array[org.apache.spark.sql.Row],
-      path: String): (Int, Int) = {
+  /** (m, sub) of a stored codebook table, from the cached rows — no
+    * per-call `countDistinct(subspace), max(size(centv))` probe job on
+    * a path whose cache already knows the shape. */
+  private def bookShape(rows: Array[Row], path: String): (Int, Int) = {
     require(rows.nonEmpty,
       s"codebook table at $path is empty — the index was never built " +
         "or is corrupt; rebuild before querying")
@@ -1409,24 +1440,29 @@ object SilverIndex {
     (m, sub)
   }
 
+  /** The frozen per-subspace codebooks reloaded as the kernel matrices:
+    * filtering each subspace and re-running [[AnnSearch.centMatrix]]
+    * reproduces the code → matrix-row mapping exactly (list_id-ascending
+    * ordering, same driver-side widening — here via the sorted-rows
+    * entry point on the cached driver rows). Widths are validated
+    * against the refresh parameters so a mismatched re-run fails
+    * loudly. */
   private def loadCodebooks(spark: SparkSession, path: String, m: Int,
       sub: Int): IndexedSeq[AnnSearch.CentMatrix] = {
     val (rows, idType) = loadBookRows(spark, path)
-    val bySub = rows.groupBy(_.getInt(0))
-    require(bySub.size == m,
-      s"index at $path has ${bySub.size} subspaces, refresh requested $m — " +
+    val (storedM, width) = bookShape(rows, path)
+    require(storedM == m,
+      s"index at $path has $storedM subspaces, refresh requested $m — " +
         "rebuild, don't mix")
-    val width = rows.iterator
-      .map(r => Option(r.getAs[scala.collection.Seq[Any]](2))
-        .fold(0)(_.length)).max
     require(width == sub,
       s"index at $path has subvector width $width, refresh derived $sub — " +
         "rebuild, don't mix")
+    val bySub = rows.groupBy(_.getInt(0))
     AnnSearch.listIdOrdering(idType) match {
       case Some(ord) =>
         (0 until m).map { j =>
           val sorted = bySub(j)
-            .map(r => org.apache.spark.sql.Row(r.get(1), r.get(2)))
+            .map(r => Row(r.get(1), r.get(2)))
             .sortWith((a, b) => ord.compare(a.get(0), b.get(0)) < 0)
           AnnSearch.centMatrixFromSortedRows(sorted, idType)
         }
@@ -1449,9 +1485,8 @@ object SilverIndex {
       rescoreMult: Int = 40): DataFrame = {
     val spark = queries.sparkSession
     val cents = loadCents(spark, path)
-    // (m, sub) from the fingerprint-cached book rows (bookShape) — r11
-    // ran a countDistinct/max aggregation JOB here on every call against
-    // a table that froze at first build (VERDICT r11 task 8)
+    // (m, sub) from the fingerprint-cached book rows — no aggregation
+    // job per call against a table that froze at first build
     val (m, sub) = bookShape(loadBookRows(spark, path)._1, path)
     val books = loadCodebooks(spark, path, m, sub)
     val codes = spark.read.parquet(codesPath(path))
@@ -1469,7 +1504,7 @@ object SilverIndex {
       .drop("centv")
       .withColumn("__lut", AnnSearch.pqQueryLut(col("qv"), books, sub))
       .withColumn("__qn", graft.functions.VectorFunctions.norm(col("qv")))
-    val cand = org.apache.spark.sql.functions.broadcast(probes)
+    val cand = broadcast(probes)
       .join(codes, "list_id")
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("qscore", AnnSearch.pqAdcCosineStored(col("__lut"),
@@ -1479,279 +1514,42 @@ object SilverIndex {
       AnnSearch.pqCandTop(cand, k * rescoreMult), c, q0, k)
   }
 
-  // ------------------------------------------------- continuous maintenance
-
-  /** Continuous index maintenance: fold every micro-batch of a STREAMING
-    * document frame into the index at `path` through `refresh` — the
-    * same exact batch refreshes above, driven by Structured Streaming's
-    * `foreachBatch`. The refreshes' id anti-join is what makes this
-    * safe under streaming semantics: foreachBatch is at-least-once (a
-    * batch can replay after a failure between the append and the
-    * checkpoint commit), and a replayed batch's doc ids are already
-    * indexed, so the anti-join drops them and the replay appends ZERO
-    * rows — at-least-once delivery, exactly-once index
-    * (StreamingIndexSpec proves replay idempotence with a forced
-    * re-run). The checkpoint lives under the index path so the two
-    * travel together.
-    *
-    * This is the "weekly cron → continuous" upgrade of the reference's
-    * batch cadence: the index is always as fresh as the last
-    * micro-batch, and each batch costs ∝ its own new docs, never a
-    * corpus recompute. */
-  def streamingRefresh(docs: DataFrame, path: String)(
-      refresh: DataFrame => Refresh)
+  /** [[streamingRefresh]] pre-wired to [[refreshIvfPq]] (first non-empty
+    * batch trains BOTH frozen quantizers — coarse centroids and residual
+    * codebooks — later batches residual-encode only unseen ids and
+    * append, the same discipline at 40 bits + a stored norm per
+    * vector). */
+  def streamingRefreshIvfPq(docs: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, m: Int, ksub: Int, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        refresh(batch); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    streamingRefresh(docs, path)(
+      refreshIvfPq(_, idCol, vecCol, nlist, m, ksub, path))
 
-  /** Visible (non-hidden) plain FILES directly under `dir` — the
-    * pre-versioned flat sketch layout's data files; version subdirs
-    * don't match (they are directories). */
-  private def flatDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath)
-  }
-
-  /** KMV sketch maintenance: fold a batch of (group, key) rows into the
-    * per-group sketch table at `path`/sketch — the streaming half of
-    * [[graft.operators.Sketches.kmvDistinct]] (the k1 sketch). The fold
-    * is union-truncate over the stored k-minima plus the batch's
-    * distinct hashes — associative, commutative, DUPLICATE-INSENSITIVE
-    * — so a replayed at-least-once micro-batch folds to the identical
-    * sketch (idempotence needs no anti-join here: the sketch itself
-    * absorbs duplicates), and the final table equals the from-scratch
-    * batch sketch REGARDLESS of arrival order or chunking (the s7 gate
-    * contract).
-    *
-    * Scale: the stored side is |groups|·k 12-char hashes, the batch
-    * side its own distinct hashes — each fold shuffles O(groups·k +
-    * batch-distinct) narrow rows, never historical raw keys (the whole
-    * point of maintaining the sketch instead of the key set). The new
-    * sketch is eagerly materialized (localCheckpoint) BEFORE the
-    * commit, since the lazy plan reads the table being replaced.
-    *
-    * The commit uses the [[refreshCms]] stage-then-rename discipline
-    * (versioned `v<n>` dirs under `path`/sketch, one atomic rename per
-    * fold, superseded versions retired AFTER the rename): an in-place
-    * overwrite would delete the directory before the job commits, so a
-    * crash mid-write would lose the ONLY copy of the accumulated
-    * k-minima (raw keys are never stored) and every later estimate
-    * would be silently low. Unlike CMS the version number carries no
-    * transaction meaning — the fold is duplicate-insensitive, so a
-    * replay folding into an already-folded sketch is a no-op by
-    * construction — it only orders the copies so readers take max. */
-  def refreshKmv(batch: DataFrame, groupCol: String, keyCol: String,
-      k: Int, path: String): Refresh = {
-    val spark = batch.sparkSession
-    val root = s"$path/sketch"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, root)
-    // one-time migration from the pre-versioned layout (parquet files
-    // directly under root): fold it in as the stored side WHEN no
-    // version exists yet — silently ignoring it would restart the
-    // sketch from the batch alone, the exact silent undercount this
-    // commit protocol exists to prevent. Retirement below runs on
-    // EVERY successful commit (not just the migrating one), so a crash
-    // between a past rename and its retirement can't orphan stale flat
-    // files forever.
-    val flat = flatDataFiles(fs, root)
-    val batchHashes = batch
-      .where(col(groupCol).isNotNull && col(keyCol).isNotNull)
-      .select(col(groupCol).as("grp"),
-        graft.operators.Sketches.kmvHash(col(keyCol)).as("hk"))
-      .distinct()
-    val stored =
-      if (committed.nonEmpty)
-        Some(spark.read.parquet(s"$root/v${committed.max}"))
-      else if (flat.nonEmpty) Some(spark.read.parquet(root))
-      else None
-    val all = stored
-      .map(_.select(col("grp"), explode(col("kmins")).as("hk")))
-      .fold(batchHashes)(batchHashes.unionByName(_).distinct())
-    val agg = udaf(new graft.operators.Sketches.KmvAgg(k))
-    val next = graft.operators.Sketches.stampShape(
-      all.groupBy("grp").agg(agg(col("hk")).as("kmins")),
-      "kmins", graft.operators.Sketches.KmvKKey -> k.toLong)
-      .localCheckpoint(true)
-    val groups = next.count()
-    // empty fold (first batch with no usable rows): committing an
-    // empty v0 would leave a version dir spark.read can't infer a
-    // schema from, wedging every later fold — skip, state is unchanged
-    if (groups == 0) return Refresh(0, 0)
-    val nv = if (committed.isEmpty) 0L else committed.max + 1
-    val tmp = s"$root/_tmp_v$nv"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw — proceeding to
-    // the retirement below on a failed rename would delete the only
-    // durable copies of the accumulated k-minima
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$root/v$nv")),
-      s"KMV commit rename failed: $tmp -> $root/v$nv (old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true))
-    flat.foreach(f => fs.delete(f, false))
-    Refresh(groups, groups)
-  }
-
-  /** Bloom BIT-SET maintenance: fold a batch of keys into the stored
-    * distinct-position table — the streaming half of
-    * [[graft.operators.Sketches.bloomBuild]] (the k4 sketch). The fold
-    * is UNION + DISTINCT over positions — associative, commutative,
-    * DUPLICATE-INSENSITIVE (the [[refreshKmv]] merge algebra), so a
-    * replayed at-least-once micro-batch folds to the identical bit set
-    * and the final table equals the from-scratch batch build
-    * regardless of arrival order or chunking (the s10 gate contract).
-    * Commits by the same stage-then-rename versioned protocol as the
-    * KMV sketch (crash-window rationale there); each fold shuffles
-    * O(bits-set + batch-distinct-positions) narrow long rows, never
-    * the historical key bag. */
-  def refreshBloom(batch: DataFrame, keyCol: String, numHashes: Int,
-      mBits: Int, path: String): Refresh = {
-    val spark = batch.sparkSession
-    val root = s"$path/bloom"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, root)
-    val batchBits = graft.operators.Sketches
-      .bloomBuild(batch, keyCol, numHashes, mBits)
-    // re-stamp: the union/distinct against the stored side does not
-    // reliably keep the builder's shape metadata
-    val next = graft.operators.Sketches.stampShape(
-      (if (committed.isEmpty) batchBits
-        else batchBits
-          .unionByName(spark.read.parquet(s"$root/v${committed.max}"))
-          .distinct()),
-      "pos", graft.operators.Sketches.BloomHashesKey -> numHashes.toLong,
-      graft.operators.Sketches.BloomBitsKey -> mBits.toLong)
-      .localCheckpoint(true)
-    val bits = next.count()
-    if (bits == 0) return Refresh(0, 0)
-    val nv = if (committed.isEmpty) 0L else committed.max + 1
-    val tmp = s"$root/_tmp_v$nv"
-    next.write.mode("overwrite").parquet(tmp)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$root/v$nv")),
-      s"Bloom commit rename failed: $tmp -> $root/v$nv (old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true))
-    Refresh(bits, bits)
-  }
-
-  /** [[streamingRefresh]] pre-wired to [[refreshBloom]]. */
-  def streamingRefreshBloom(rows: DataFrame, keyCol: String,
-      numHashes: Int, mBits: Int, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamingRefresh(rows, path)(
-      refreshBloom(_, keyCol, numHashes, mBits, path))
-
-  /** The maintained bit set: distinct `pos` rows — the highest
-    * committed version under `path`/bloom. */
-  def bloomIndex(spark: SparkSession, path: String): DataFrame = {
-    val root = s"$path/bloom"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, root)
-    require(vs.nonEmpty, s"no committed Bloom bit set under $root")
-    spark.read.parquet(s"$root/v${vs.max}")
-  }
-
-  /** HyperLogLog register maintenance under streaming arrival — the
-    * s7 merge-idempotent discipline verbatim: the per-bucket MAX fold
-    * is associative, commutative, and duplicate-insensitive, so an
-    * at-least-once replay of any batch is a no-op by construction and
-    * the maintained register table is row-identical to the
-    * from-scratch batch build (the s12 gate contract — k5's oracle
-    * applies verbatim). Commits by the stage-then-rename versioned
-    * protocol (crash rationale at refreshKmv). Fold cost: the stored
-    * side is ≤ groups·m register rows, the batch side its
-    * map-combined partial maxima — O(sketch) per batch, never
-    * O(events). */
-  def refreshHll(batch: DataFrame, groupCols: Seq[String],
-      keyCol: String, path: String): Refresh = {
-    val spark = batch.sparkSession
-    val root = s"$path/hll"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, root)
-    val batchRegs = graft.operators.Sketches
-      .hllBuild(batch, groupCols, keyCol)
-    val next = (if (committed.isEmpty) batchRegs
-      else batchRegs
-        .unionByName(spark.read.parquet(s"$root/v${committed.max}"))
-        .groupBy((groupCols :+ "bucket").map(col): _*)
-        .agg(max(col("reg")).cast("int").as("reg")))
-      .localCheckpoint(true)
-    val n = next.count()
-    if (n == 0) return Refresh(0, 0)
-    val nv = if (committed.isEmpty) 0L else committed.max + 1
-    val tmp = s"$root/_tmp_v$nv"
-    next.write.mode("overwrite").parquet(tmp)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$root/v$nv")),
-      s"HLL commit rename failed: $tmp -> $root/v$nv (old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true))
-    Refresh(n, n)
-  }
-
-  /** [[streamingRefresh]] pre-wired to [[refreshHll]]. */
-  def streamingRefreshHll(rows: DataFrame, groupCols: Seq[String],
-      keyCol: String, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamingRefresh(rows, path)(
-      refreshHll(_, groupCols, keyCol, path))
-
-  /** The maintained register table — the highest committed version
-    * under `path`/hll. */
-  def hllIndex(spark: SparkSession, path: String): DataFrame = {
-    val root = s"$path/hll"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, root)
-    require(vs.nonEmpty, s"no committed HLL register table under $root")
-    spark.read.parquet(s"$root/v${vs.max}")
-  }
+  // ------------------------------------------------- quantile sample (s8)
 
   /** Quantile-SAMPLE maintenance: fold a batch into the deterministic
     * hash sample behind [[graft.operators.Sketches.sampleQuantiles]]
     * (the k3 sketch). Membership is a pure per-row function of
-    * (salt, id) — a batch contributes exactly its qualifying rows —
-    * and the id anti-join makes an at-least-once REPLAY append zero
-    * (the [[streamingRefresh]] discipline), so the stored sample is
-    * row-identical to the batch gate over everything that arrived and
+    * (salt, id) — a batch contributes exactly its qualifying rows — so
+    * the sample is a PerDocArtifact keyed on the row id: the anti-join
+    * makes an at-least-once REPLAY append zero, the stored sample is
+    * row-identical to the batch gate over everything that arrived, and
     * [[graft.operators.Sketches.rankSelect]] serves the identical
-    * quantiles. Scale: each fold appends rate·|batch| narrow rows;
-    * quantile serving sorts only the stored sample. */
+    * quantiles. `total` is the stored sample size. Scale: each fold
+    * appends rate·|batch| narrow rows; quantile serving sorts only the
+    * stored sample. */
   def refreshQuantileSample(batch: DataFrame, idCol: String,
       valCol: String, groupCols: Seq[String], salt: String, rate: Double,
       path: String): Refresh = {
-    val spark = batch.sparkSession
-    val samplePath = s"$path/sample"
+    val hk = graft.operators.Splits.hashKey(col(idCol), salt)
     val sample = batch
       .where(col(valCol).isNotNull && col(idCol).isNotNull &&
-        graft.operators.Splits.hashKey(col(idCol), salt) <
-          lit(graft.operators.Splits.thresholdHex(rate)))
+        hk < lit(graft.operators.Splits.thresholdHex(rate)))
       .select(groupCols.map(col) ++ Seq(col(idCol).as("__id"),
-        col(valCol).as("__v"),
-        graft.operators.Splits.hashKey(col(idCol), salt).as("__hk")): _*)
-    val newRows = readIfData(spark, samplePath)
-      .fold(sample)(ix => sample.join(ix.select(col("__id")),
-        Seq("__id"), "left_anti"))
-      .localCheckpoint(true)
-    newRows.write.mode("append").parquet(samplePath)
-    val appended = newRows.count()
-    Refresh(appended, appended)
+        col(valCol).as("__v"), hk.as("__hk")): _*)
+    val ix = new PerDocArtifact(batch.sparkSession, s"$path/sample", "__id",
+      oneRowPerId = true)
+    ix.append(ix.unseen(sample, "__id"))
   }
 
   /** [[streamingRefresh]] pre-wired to [[refreshQuantileSample]]. */
@@ -1765,76 +1563,146 @@ object SilverIndex {
     * .Sketches.rankSelect]] over the maintained rows. */
   def quantilesFromSample(spark: SparkSession, path: String,
       groupCols: Seq[String], qs: Seq[Double]): DataFrame =
-    graft.operators.Sketches.rankSelect(
+    Sketches.rankSelect(
       spark.read.parquet(s"$path/sample")
         .select(groupCols.map(col) :+ col("__v") :+ col("__hk"): _*),
       groupCols, qs)
 
-  /** Count-Min sketch maintenance under streaming arrival — the THIRD
-    * maintenance discipline, for ADDITIVE state: [[refreshKmv]]'s
-    * union-truncate merge absorbs replays by construction,
-    * [[refreshQuantileSample]]'s append dedupes on row ids — but CMS
-    * counts can do neither (a replayed batch would double-count, and
-    * the sketch keeps no ids to anti-join). Exactly-once here is the
-    * standard foreachBatch TRANSACTIONAL guard: every fold writes the
-    * micro-batch id it committed alongside the counters, and a replay
-    * of batch ≤ the stored id is a no-op. foreachBatch delivers batch
-    * ids monotonically, so one stored long is the whole transaction
-    * log. Fold cost: the stored side is depth·width rows, the batch
-    * side its map-side-combined partial counts — O(sketch) per batch,
-    * never O(events). */
-  /** The committed sketch versions under `path`: one `v<n>` directory
-    * per committed fold (CMS: n = batch id; KMV: a plain sequence).
-    * For CMS the directory NAME carries the batch id, so one atomic
-    * rename commits the counters AND the transaction record together —
-    * a separate marker file would leave a window where one is durable
-    * without the other (double-count on replay, or a truncated marker
-    * wedging every later batch). */
-  private def versionsUnder(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") &&
-        n.drop(1).forall(_.isDigit) => n.drop(1).toLong }
+  // ---------------------------------------- merge-idempotent sketch folds
+
+  /** KMV sketch maintenance: fold a batch of (group, key) rows into the
+    * per-group sketch table at `path`/sketch — the streaming half of
+    * [[graft.operators.Sketches.kmvDistinct]] (the k1 sketch). The fold
+    * is union-truncate over the stored k-minima plus the batch's
+    * distinct hashes — associative, commutative, DUPLICATE-INSENSITIVE
+    * — so a replayed at-least-once micro-batch folds to the identical
+    * sketch, and the final table equals the from-scratch batch sketch
+    * REGARDLESS of arrival order or chunking (the s7 gate contract).
+    * Commits as a sequence [[VersionedFold]].
+    *
+    * Scale: the stored side is |groups|·k 12-char hashes, the batch
+    * side its own distinct hashes — each fold shuffles O(groups·k +
+    * batch-distinct) narrow rows, never historical raw keys (the whole
+    * point of maintaining the sketch instead of the key set). */
+  def refreshKmv(batch: DataFrame, groupCol: String, keyCol: String,
+      k: Int, path: String): Refresh = {
+    val batchHashes = batch
+      .where(col(groupCol).isNotNull && col(keyCol).isNotNull)
+      .select(col(groupCol).as("grp"), Sketches.kmvHash(col(keyCol)).as("hk"))
+      .distinct()
+    val agg = udaf(new Sketches.KmvAgg(k))
+    new VersionedFold(batch.sparkSession, s"$path/sketch", "KMV sketch")
+      .foldNext { stored =>
+        val all = stored
+          .map(_.select(col("grp"), explode(col("kmins")).as("hk")))
+          .fold(batchHashes)(batchHashes.unionByName(_).distinct())
+        Sketches.stampShape(all.groupBy("grp").agg(agg(col("hk")).as("kmins")),
+          "kmins", Sketches.KmvKKey -> k.toLong)
+      }
   }
 
+  /** [[streamingRefresh]] pre-wired to [[refreshKmv]]. */
+  def streamingRefreshKmv(rows: DataFrame, groupCol: String,
+      keyCol: String, k: Int, path: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamingRefresh(rows, path)(refreshKmv(_, groupCol, keyCol, k, path))
+
+  /** The sketch table as stored: (grp, kmins) — the highest committed
+    * version under `path`/sketch. */
+  def kmvIndex(spark: SparkSession, path: String): DataFrame =
+    new VersionedFold(spark, s"$path/sketch", "KMV sketch").latest()
+
+  /** Bloom BIT-SET maintenance: fold a batch of keys into the stored
+    * distinct-position table — the streaming half of
+    * [[graft.operators.Sketches.bloomBuild]] (the k4 sketch). The fold
+    * is UNION + DISTINCT over positions — associative, commutative,
+    * DUPLICATE-INSENSITIVE (the [[refreshKmv]] merge algebra), so a
+    * replayed at-least-once micro-batch folds to the identical bit set
+    * and the final table equals the from-scratch batch build
+    * regardless of arrival order or chunking (the s10 gate contract).
+    * Each fold shuffles O(bits-set + batch-distinct-positions) narrow
+    * long rows, never the historical key bag. */
+  def refreshBloom(batch: DataFrame, keyCol: String, numHashes: Int,
+      mBits: Int, path: String): Refresh = {
+    val batchBits = Sketches.bloomBuild(batch, keyCol, numHashes, mBits)
+    new VersionedFold(batch.sparkSession, s"$path/bloom", "Bloom bit set")
+      .foldNext { stored =>
+        // re-stamp: the union/distinct against the stored side does not
+        // reliably keep the builder's shape metadata
+        Sketches.stampShape(
+          stored.fold(batchBits)(batchBits.unionByName(_).distinct()),
+          "pos", Sketches.BloomHashesKey -> numHashes.toLong,
+          Sketches.BloomBitsKey -> mBits.toLong)
+      }
+  }
+
+  /** [[streamingRefresh]] pre-wired to [[refreshBloom]]. */
+  def streamingRefreshBloom(rows: DataFrame, keyCol: String,
+      numHashes: Int, mBits: Int, path: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamingRefresh(rows, path)(
+      refreshBloom(_, keyCol, numHashes, mBits, path))
+
+  /** The maintained bit set: distinct `pos` rows — the highest
+    * committed version under `path`/bloom. */
+  def bloomIndex(spark: SparkSession, path: String): DataFrame =
+    new VersionedFold(spark, s"$path/bloom", "Bloom bit set").latest()
+
+  /** HyperLogLog register maintenance under streaming arrival — the
+    * s7 merge-idempotent discipline verbatim: the per-bucket MAX fold
+    * is associative, commutative, and duplicate-insensitive, so an
+    * at-least-once replay of any batch is a no-op by construction and
+    * the maintained register table is row-identical to the
+    * from-scratch batch build (the s12 gate contract — k5's oracle
+    * applies verbatim). Fold cost: the stored side is ≤ groups·m
+    * register rows, the batch side its map-combined partial maxima —
+    * O(sketch) per batch, never O(events). */
+  def refreshHll(batch: DataFrame, groupCols: Seq[String],
+      keyCol: String, path: String): Refresh = {
+    val batchRegs = Sketches.hllBuild(batch, groupCols, keyCol)
+    new VersionedFold(batch.sparkSession, s"$path/hll", "HLL register table")
+      .foldNext(_.fold(batchRegs)(s => batchRegs.unionByName(s)
+        .groupBy((groupCols :+ "bucket").map(col): _*)
+        .agg(max(col("reg")).cast("int").as("reg"))))
+  }
+
+  /** [[streamingRefresh]] pre-wired to [[refreshHll]]. */
+  def streamingRefreshHll(rows: DataFrame, groupCols: Seq[String],
+      keyCol: String, path: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamingRefresh(rows, path)(
+      refreshHll(_, groupCols, keyCol, path))
+
+  /** The maintained register table — the highest committed version
+    * under `path`/hll. */
+  def hllIndex(spark: SparkSession, path: String): DataFrame =
+    new VersionedFold(spark, s"$path/hll", "HLL register table").latest()
+
+  // ------------------------------------------- batch-id guarded folds
+
+  /** Count-Min sketch maintenance under streaming arrival — for
+    * ADDITIVE state: [[refreshKmv]]'s union-truncate merge absorbs
+    * replays by construction, [[refreshQuantileSample]]'s append dedupes
+    * on row ids — but CMS counts can do neither (a replayed batch would
+    * double-count, and the sketch keeps no ids to anti-join). Exactly-
+    * once here is the standard foreachBatch TRANSACTIONAL guard: the
+    * [[VersionedFold]] version is the micro-batch id, and a replay of
+    * a batch id ≤ the stored one is a no-op. Fold cost: the stored side
+    * is depth·width rows, the batch side its map-side-combined partial
+    * counts — O(sketch) per batch, never O(events). */
   def refreshCms(batch: DataFrame, batchId: Long, keyCol: String,
       width: Int, depth: Int, path: String): Refresh = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    val part = graft.operators.Sketches
-      .cmsBuild(batch, keyCol, width, depth)
-    // re-stamp the shape the merge aggregation drops, so the persisted
-    // counters always carry it (the serve-time mismatch guard)
-    val next = graft.operators.Sketches.stampShape(
-      (if (last < 0) part
-        else part.unionByName(spark.read.parquet(s"$path/v$last"))
+    val f = new VersionedFold(batch.sparkSession, path, "CMS sketch")
+    f.foldBatch(batchId) {
+      val part = Sketches.cmsBuild(batch, keyCol, width, depth)
+      // re-stamp the shape the merge aggregation drops, so the persisted
+      // counters always carry it (the serve-time mismatch guard)
+      staged(Sketches.stampShape(
+        f.stored().fold(part)(s => part.unionByName(s)
           .groupBy("row", "bucket").agg(sum(col("cnt")).as("cnt"))),
-      "cnt", graft.operators.Sketches.CmsWidthKey -> width.toLong,
-      graft.operators.Sketches.CmsDepthKey -> depth.toLong)
-      .localCheckpoint(true)
-    // stage then RENAME: the rename is the commit point. A crash
-    // before it leaves an orphan _tmp the replay overwrites; a crash
-    // after it makes the replay a no-op (batchId <= last above).
-    val tmp = s"$path/_tmp_v$batchId"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw (e.g. destination
-    // left by a duplicate writer) — proceeding to the retirement below
-    // on a failed rename would delete the only committed counters
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/v$batchId")),
-      s"CMS commit rename failed: $tmp -> $path/v$batchId (old versions kept)")
-    // best-effort retirement of superseded versions (single-writer
-    // foreachBatch; gate reads happen after the stream stops)
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+        "cnt", Sketches.CmsWidthKey -> width.toLong,
+        Sketches.CmsDepthKey -> depth.toLong))
+    }
   }
 
   /** [[refreshCms]] driven by Structured Streaming (the batch id comes
@@ -1842,35 +1710,21 @@ object SilverIndex {
   def streamingRefreshCms(rows: DataFrame, keyCol: String, width: Int,
       depth: Int, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshCms(batch, id, keyCol, width, depth, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    foreachBatchStream(rows, path)(refreshCms(_, _, keyCol, width, depth,
+      path))
 
   /** The maintained counter table: (row, bucket, cnt) — the highest
     * committed version. */
-  def cmsIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed CMS version under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
-
-  // ------------------------------------- drift ledger (s15, additive)
+  def cmsIndex(spark: SparkSession, path: String): DataFrame =
+    new VersionedFold(spark, path, "CMS sketch").latest()
 
   /** STREAMING maintenance of the drift (period, category, count)
     * ledger — [[graft.operators.Drift.tvDriftFromLedger]]'s substrate.
     * Counts are an ADDITIVE fold over the feed, exactly the CMS
-    * counters' algebra: neither merge-idempotent (a replayed batch
-    * would double-count) nor id-anti-join-able (there is no row
-    * identity after aggregation), so the batch-id transactional
-    * discipline applies verbatim — version per committed batch id,
-    * stage-then-rename commit, replays of an already-committed id
-    * fold to a no-op. NULL periods/categories drop here, mirroring
+    * counters' algebra: neither merge-idempotent nor id-anti-join-able
+    * (there is no row identity after aggregation), so the batch-id
+    * guarded [[VersionedFold]] applies verbatim. NULL
+    * periods/categories drop here, mirroring
     * [[graft.operators.Drift.tvDrift]]'s filter, so ledger-served
     * reports equal scan-fed ones exactly.
     *
@@ -1880,77 +1734,47 @@ object SilverIndex {
     * rescanned. */
   def refreshDriftLedger(batch: DataFrame, batchId: Long,
       periodCol: String, catCol: String, path: String): Refresh = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    val part = batch
-      .where(col(periodCol).isNotNull && col(catCol).isNotNull)
-      .select(col(periodCol).as("period"), col(catCol).as("category"))
-      .groupBy("period", "category").agg(count(lit(1)).as("cnt"))
-    val next = (if (last < 0) part
-      else part.unionByName(spark.read.parquet(s"$path/v$last"))
-        .groupBy("period", "category").agg(sum(col("cnt")).as("cnt")))
-      .localCheckpoint(true)
-    val tmp = s"$path/_tmp_v$batchId"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw — proceeding to
-    // the retirement below on a failed rename would delete the only
-    // committed ledger
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/v$batchId")),
-      s"drift-ledger commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+    val f = new VersionedFold(batch.sparkSession, path, "drift ledger")
+    f.foldBatch(batchId) {
+      val part = batch
+        .where(col(periodCol).isNotNull && col(catCol).isNotNull)
+        .select(col(periodCol).as("period"), col(catCol).as("category"))
+        .groupBy("period", "category").agg(count(lit(1)).as("cnt"))
+      staged(f.stored().fold(part)(s => part.unionByName(s)
+        .groupBy("period", "category").agg(sum(col("cnt")).as("cnt"))))
+    }
   }
 
   /** [[refreshDriftLedger]] driven by Structured Streaming. */
   def streamingRefreshDriftLedger(rows: DataFrame, periodCol: String,
       catCol: String, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshDriftLedger(batch, id, periodCol, catCol, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    foreachBatchStream(rows, path)(refreshDriftLedger(_, _, periodCol,
+      catCol, path))
 
   /** The maintained ledger: (period, category, cnt) — the highest
     * committed version. */
-  def driftLedgerIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed drift ledger under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
-
-  // -------------------------------- gold MAX rollup (g3, semilattice)
+  def driftLedgerIndex(spark: SparkSession, path: String): DataFrame =
+    new VersionedFold(spark, path, "drift ledger").latest()
 
   /** INCREMENTAL maintenance of a GROUP-BY-MAX gold table — the
     * reference's `nyc_salary_matches_unique_job_posting_title` CTAS
-    * (/root/reference/sql/cleaned.sql:28-42) re-aggregates ALL of
-    * bronze on every weekly run; at 100 TB the rollup must instead
-    * fold only the new batch: aggregate the arriving rows to per-key
-    * partial MAXes (map-side combined, batch-sized), merge with the
-    * stored rollup (one row per key — OUTPUT-sized, the corpus is
-    * never rescanned), and commit via stage-then-rename.
+    * re-aggregates ALL of bronze on every weekly run; at 100 TB the
+    * rollup must instead fold only the new batch: aggregate the
+    * arriving rows to per-key partial MAXes (map-side combined,
+    * batch-sized), merge with the stored rollup (one row per key —
+    * OUTPUT-sized, the corpus is never rescanned), and commit a new
+    * [[VersionedFold]] version.
     *
     * Discipline: MAX over every carried column is a SEMILATTICE merge
     * (associative, commutative, idempotent), so unlike the additive
     * CMS/drift folds a REPLAYED batch cannot corrupt the rollup even
-    * without the version guard — max(a, a) = a. The batch-id version
-    * is kept anyway: it makes replays free (skip instead of re-merge)
-    * and the rename the crash-safe commit point, same protocol as
-    * [[refreshCms]]. NULL keys drop (a NULL group key is SQL's one
-    * non-mergeable group; the gold CTAS's GROUP BY would keep it as
-    * its own row, but bronze titles are NOT NULL by construction and
-    * the gate's oracle confirms the equality).
+    * without the batch-id guard — max(a, a) = a. The guard is kept
+    * anyway: it makes replays free (skip instead of re-merge). NULL
+    * keys drop (a NULL group key is SQL's one non-mergeable group; the
+    * gold CTAS's GROUP BY would keep it as its own row, but bronze
+    * titles are NOT NULL by construction and the gate's oracle
+    * confirms the equality).
     *
     * `maxCols` values must be max-comparable under Spark's ordering
     * (numerics, strings, dates) — the same requirement the CTAS's MAX
@@ -1960,57 +1784,27 @@ object SilverIndex {
       keyCols: Seq[String], maxCols: Seq[String], path: String): Refresh = {
     require(keyCols.nonEmpty && maxCols.nonEmpty,
       "refreshMaxRollup needs at least one key and one max column")
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    val aggs = maxCols.map(c => max(col(c)).as(c))
-    val part = batch
-      .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    val next = (if (last < 0) part
-      else part.unionByName(spark.read.parquet(s"$path/v$last"))
-        .groupBy(keyCols.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*))
-      .localCheckpoint(true)
-    val tmp = s"$path/_tmp_v$batchId"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw — proceeding to
-    // the retirement below on a failed rename would delete the only
-    // committed rollup
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/v$batchId")),
-      s"gold-rollup commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+    val f = new VersionedFold(batch.sparkSession, path, "gold rollup")
+    f.foldBatch(batchId) {
+      val aggs = maxCols.map(c => max(col(c)).as(c))
+      def rollup(df: DataFrame) =
+        df.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      val part = rollup(batch.where(keyCols.map(col(_).isNotNull).reduce(_ && _)))
+      staged(f.stored().fold(part)(s => rollup(part.unionByName(s))))
+    }
   }
 
   /** [[refreshMaxRollup]] driven by Structured Streaming. */
   def streamingRefreshMaxRollup(rows: DataFrame, keyCols: Seq[String],
       maxCols: Seq[String], path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshMaxRollup(batch, id, keyCols, maxCols, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    foreachBatchStream(rows, path)(refreshMaxRollup(_, _, keyCols, maxCols,
+      path))
 
   /** The maintained rollup (one row per key, current MAXes) — the
     * highest committed version. */
-  def maxRollupIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed gold rollup under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
+  def maxRollupIndex(spark: SparkSession, path: String): DataFrame =
+    new VersionedFold(spark, path, "gold rollup").latest()
 
   // --------------------- maintained connected components (d19, r18)
 
@@ -2038,11 +1832,10 @@ object SilverIndex {
     * EXACTLY (d8's oracle applies verbatim to d19; SilverIndexSpec
     * fuzzes edge chunkings incl. cross-batch bridge merges).
     *
-    * Commit discipline: the [[refreshMaxRollup]] family (versioned
-    * batch-id + stage-then-rename; replays of a committed id no-op) —
-    * and like MAX, the fold is a semilattice (duplicate edges are
-    * absorbed by contraction), so replays are harmless by algebra too.
-    * The per-fold write is the roots table — output-sized (one row per
+    * Commit discipline: the batch-id guarded [[VersionedFold]] — and
+    * like MAX, the fold is a semilattice (duplicate edges are absorbed
+    * by contraction), so replays are harmless by algebra too. The
+    * per-fold write is the roots table — output-sized (one row per
     * ever-seen node), never the pair log; a deployment whose node
     * count outgrows a comfortable rewrite buckets the table by
     * pmod(component) and rewrites only buckets holding a remapped
@@ -2054,60 +1847,49 @@ object SilverIndex {
     * this artifact, re-fold the clean log. */
   def refreshComponents(pairs: DataFrame, batchId: Long, aCol: String,
       bCol: String, path: String): Refresh = {
-    val spark = pairs.sparkSession
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    val e = pairs
-      .select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .where(col("__a").isNotNull && col("__b").isNotNull &&
-        col("__a") =!= col("__b"))
-    // an empty FIRST batch commits nothing (an empty roots version has
-    // no parquet schema to read back); an empty later batch folds
-    // through as identity below
-    if (last < 0 && e.isEmpty) return Refresh(0, last)
-    val next: DataFrame =
-      if (last < 0)
-        graft.operators.Components.connectedComponents(e, "__a", "__b")
-      else {
-        val stored = spark.read.parquet(s"$path/v$last")
-        val contracted = e
-          .join(stored.select(col("node").as("__a"),
-            col("component").as("__ra")), Seq("__a"), "left")
-          .join(stored.select(col("node").as("__b"),
-            col("component").as("__rb")), Seq("__b"), "left")
-          .select(coalesce(col("__ra"), col("__a")).as("__ca"),
-            coalesce(col("__rb"), col("__b")).as("__cb"))
-          .where(col("__ca") =!= col("__cb"))
-        // merge map over the contracted graph: (old root | new node) →
-        // new root. Feeds the remap join AND the new-node join.
-        val m = graft.operators.Components
-          .connectedComponents(contracted, "__ca", "__cb")
-          .localCheckpoint(true)
-        val remapped = stored
-          .join(m.select(col("node").as("component"),
-            col("component").as("__nr")), Seq("component"), "left")
-          .select(col("node"),
-            coalesce(col("__nr"), col("component")).as("component"))
-        // every new node survives contraction (it contracts to itself
-        // and cannot equal a stored root), so the merge map covers it
-        val newRoots = e.select(col("__a").as("node"))
-          .unionByName(e.select(col("__b").as("node")))
-          .distinct()
-          .join(stored.select(col("node")), Seq("node"), "left_anti")
-          .join(m, Seq("node"))
-        remapped.unionByName(newRoots)
+    val f = new VersionedFold(pairs.sparkSession, path, "component map")
+    f.foldBatch(batchId) {
+      val e = pairs
+        .select(col(aCol).as("__a"), col(bCol).as("__b"))
+        .where(col("__a").isNotNull && col("__b").isNotNull &&
+          col("__a") =!= col("__b"))
+      f.stored() match {
+        // an empty FIRST batch commits nothing (an empty roots version
+        // has no parquet schema to read back); an empty later batch
+        // folds through as identity below
+        case None =>
+          if (e.isEmpty) None
+          else staged(graft.operators.Components
+            .connectedComponents(e, "__a", "__b"))
+        case Some(stored) =>
+          val contracted = e
+            .join(stored.select(col("node").as("__a"),
+              col("component").as("__ra")), Seq("__a"), "left")
+            .join(stored.select(col("node").as("__b"),
+              col("component").as("__rb")), Seq("__b"), "left")
+            .select(coalesce(col("__ra"), col("__a")).as("__ca"),
+              coalesce(col("__rb"), col("__b")).as("__cb"))
+            .where(col("__ca") =!= col("__cb"))
+          // merge map over the contracted graph: (old root | new node) →
+          // new root. Feeds the remap join AND the new-node join.
+          val m = graft.operators.Components
+            .connectedComponents(contracted, "__ca", "__cb")
+            .localCheckpoint(true)
+          val remapped = stored
+            .join(m.select(col("node").as("component"),
+              col("component").as("__nr")), Seq("component"), "left")
+            .select(col("node"),
+              coalesce(col("__nr"), col("component")).as("component"))
+          // every new node survives contraction (it contracts to itself
+          // and cannot equal a stored root), so the merge map covers it
+          val newRoots = e.select(col("__a").as("node"))
+            .unionByName(e.select(col("__b").as("node")))
+            .distinct()
+            .join(stored.select(col("node")), Seq("node"), "left_anti")
+            .join(m, Seq("node"))
+          staged(remapped.unionByName(newRoots))
       }
-    val out = next.localCheckpoint(true)
-    val tmp = s"$path/_tmp_v$batchId"
-    out.write.mode("overwrite").parquet(tmp)
-    require(fs.rename(new Path(tmp), new Path(s"$path/v$batchId")),
-      s"components commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v => fs.delete(new Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+    }
   }
 
   /** The maintained component map (node → component root = min member
@@ -2115,13 +1897,8 @@ object SilverIndex {
     * are their own components and are not stored (the
     * [[graft.operators.Components.connectedComponents]] contract —
     * left-join + coalesce on the caller's side). */
-  def componentsIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed component map under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
+  def componentsIndex(spark: SparkSession, path: String): DataFrame =
+    new VersionedFold(spark, path, "component map").latest()
 
   /** [[refreshComponents]] driven by Structured Streaming — the
     * continuously-fed dedup-clustering face (near-dup pairs arrive
@@ -2130,40 +1907,33 @@ object SilverIndex {
   def streamingRefreshComponents(rows: DataFrame, aCol: String,
       bCol: String, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshComponents(batch.toDF(), id, aCol, bCol, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    foreachBatchStream(rows, path)(refreshComponents(_, _, aCol, bCol, path))
 
   // ------------------------------ maintained SCD2 history (g6, r17)
 
   /** INCREMENTAL maintenance of an SCD TYPE-2 history — the g4/g5
-    * composite (VERDICT r16 task 4): g5 maintains the SNAPSHOT from a
-    * change log, g4 rebuilds HISTORY from the full log every run; this
-    * folds each change batch into a persisted history table instead
-    * (close the open version, open the new one), so cost follows the
-    * change log — the full log is never rescanned. Retires the
-    * reference's weekly full-refetch chain
-    * (/root/reference/src/cleaned_data.py:16-46) at the history layer.
+    * composite: g5 maintains the SNAPSHOT from a change log, g4
+    * rebuilds HISTORY from the full log every run; this folds each
+    * change batch into a persisted history table instead (close the
+    * open version, open the new one), so cost follows the change log —
+    * the full log is never rescanned. Retires the reference's weekly
+    * full-refetch chain at the history layer.
     *
     * Discipline: SCD2 close is NOT a semilattice (closing a version is
     * neither idempotent against replays nor order-free), so BOTH s9
-    * guards are load-bearing: the batch-id version makes a replayed
-    * batch a no-op (and the stage-then-rename the crash-safe commit
-    * point), and a strictly-increasing high-water mark on the change
-    * timestamps makes the fold EXACT — a batch carrying a timestamp at
-    * or below the stored mark raises, because an event older than an
-    * already-collapsed state cannot be stitched without the full log
-    * (rebuild for out-of-order feeds). Within those bounds the
-    * maintained history equals [[graft.operators.Scd2.history]] over
-    * the concatenated log EXACTLY — the batch-boundary stitch drops a
-    * batch's first version when it repeats the stored current state
-    * (the cross-batch collapse) and closes the stored current at the
-    * first surviving batch version's effective_from; g4's oracle
-    * applies VERBATIM (gate g6; Scd2IncrementalSpec fuzzes chunkings).
+    * guards are load-bearing: the batch-id guarded [[VersionedFold]]
+    * makes a replayed batch a no-op, and a strictly-increasing
+    * high-water mark on the change timestamps makes the fold EXACT — a
+    * batch carrying a timestamp at or below the stored mark raises,
+    * because an event older than an already-collapsed state cannot be
+    * stitched without the full log (rebuild for out-of-order feeds).
+    * Within those bounds the maintained history equals
+    * [[graft.operators.Scd2.history]] over the concatenated log
+    * EXACTLY — the batch-boundary stitch drops a batch's first version
+    * when it repeats the stored current state (the cross-batch
+    * collapse) and closes the stored current at the first surviving
+    * batch version's effective_from; g4's oracle applies VERBATIM
+    * (gate g6; Scd2IncrementalSpec fuzzes chunkings).
     *
     * Shuffles: one key-partitioned window over the BATCH (batch-sized),
     * one key join against the stored CURRENT segment (keys-sized), one
@@ -2178,48 +1948,54 @@ object SilverIndex {
     * OVERWRITE, so a crashed fold's replay re-emits identically (the
     * s6 pairs-partition discipline) — while the keys-sized CURRENT
     * segment (one open version per key) is the only thing the
-    * stage-then-rename version commit rewrites. Crash windows: closed
-    * is written FIRST, so a crash before the current-segment rename
-    * replays the whole fold against the untouched previous current
-    * version and overwrites `closed/batch=N` with the identical rows;
-    * a replay after the rename no-ops on the batch-id guard with the
-    * closed partition already durable. */
+    * versioned commit rewrites. Crash windows: a crash before the
+    * current-segment rename replays the whole fold against the
+    * untouched previous current version and overwrites
+    * `closed/batch=N` with the identical rows; a replay after the
+    * rename no-ops on the batch-id guard with the closed partition
+    * already durable. */
   def refreshScd2(batch: DataFrame, batchId: Long, keyCol: String,
       attrCols: Seq[String], tsCol: String, path: String): Refresh = {
     require(attrCols.nonEmpty, "refreshScd2 needs at least one attribute")
     val spark = batch.sparkSession
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    // an orphaned closed/batch=N with last < N != batchId is a CRASHED
-    // fold whose current-segment commit never landed, arriving now
-    // under a DIFFERENT id (ADVICE r17): folding over it would close
-    // the same stored-current versions twice with conflicting
-    // effective_to values (and silently lose the crashed batch's
-    // rows once N <= the new committed version un-hides the orphan in
-    // [[scd2Index]]). Replaying the SAME id is the recovery path — the
-    // per-batch overwrite re-emits identically — so N == batchId
-    // passes; anything else raises before touching state.
-    val closedDir = new Path(s"$path/closed")
-    if (fs.exists(closedDir)) {
-      val orphans = fs.listStatus(closedDir).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-        .filter(n => n > last && n != batchId)
-      require(orphans.isEmpty,
-        s"refreshScd2: orphaned closed partition(s) batch=" +
-          s"${orphans.sorted.mkString(",")} from a crashed fold — " +
-          s"replay that batch id (the overwrite re-emits identically) " +
-          s"or remove the partition; folding batch $batchId over it " +
-          "would close the same stored versions twice")
+    val f = new VersionedFold(spark, path, "scd2 history")
+    f.foldBatch(batchId) {
+      // an orphaned closed/batch=N with last < N != batchId is a CRASHED
+      // fold whose current-segment commit never landed, arriving now
+      // under a DIFFERENT id: folding over it would close the same
+      // stored-current versions twice with conflicting effective_to
+      // values (and silently lose the crashed batch's rows once N <= the
+      // new committed version un-hides the orphan in [[scd2Index]]).
+      // Replaying the SAME id is the recovery path — the per-batch
+      // overwrite re-emits identically — so N == batchId passes;
+      // anything else raises before touching state.
+      val fs = fsOf(spark, path)
+      val closedDir = new Path(s"$path/closed")
+      if (fs.exists(closedDir)) {
+        val orphans = fs.listStatus(closedDir).map(_.getPath.getName)
+          .filter(_.startsWith("batch="))
+          .map(_.stripPrefix("batch=").toLong)
+          .filter(n => n > f.last && n != batchId)
+        require(orphans.isEmpty,
+          s"refreshScd2: orphaned closed partition(s) batch=" +
+            s"${orphans.sorted.mkString(",")} from a crashed fold — " +
+            s"replay that batch id (the overwrite re-emits identically) " +
+            s"or remove the partition; folding batch $batchId over it " +
+            "would close the same stored versions twice")
+      }
+      val valid = batch.where(col(keyCol).isNotNull && col(tsCol).isNotNull)
+      // an empty FIRST batch commits nothing (an empty-history version
+      // would have no parquet schema to read back); an empty later batch
+      // folds through as identity below
+      if (f.last < 0 && valid.isEmpty) None
+      else Some(scd2Fold(f, valid, batchId, keyCol, attrCols, tsCol, path))
     }
-    val valid = batch.where(col(keyCol).isNotNull && col(tsCol).isNotNull)
-    // an empty FIRST batch commits nothing (an empty-history version
-    // would have no parquet schema to read back); an empty later batch
-    // folds through as identity below
-    if (last < 0 && valid.isEmpty) return Refresh(0, last)
+  }
+
+  /** The stitch and staged writer of one [[refreshScd2]] fold. */
+  private def scd2Fold(f: VersionedFold, valid: DataFrame, batchId: Long,
+      keyCol: String, attrCols: Seq[String], tsCol: String,
+      path: String): String => Unit = {
     // the batch history feeds BOTH segment writes (and, in the stitch,
     // the close-point aggregation too) — materialize it once instead
     // of re-running the batch window per consumer (it is
@@ -2228,72 +2004,65 @@ object SilverIndex {
       .history(valid, keyCol, attrCols, tsCol).localCheckpoint(true)
     val attrs = struct(attrCols.map(col): _*)
     val (closedNew: DataFrame, currentNext: DataFrame) =
-      if (last < 0)
-        (bh.where(!col("is_current")), bh.where(col("is_current")))
-      else {
-        val stored = spark.read.parquet(s"$path/v$last/history")
-        val hwm = spark.read.parquet(s"$path/v$last/hwm")
-        // the exactness guard: one broadcast-nested-loop probe of the
-        // batch against the single-row mark, first violation suffices
-        val viol = valid.join(broadcast(hwm), col(tsCol) <= col("hwm"))
-          .limit(1).count()
-        require(viol == 0L,
-          s"refreshScd2: batch $batchId carries timestamps at or below " +
-            "the stored high-water mark — the incremental fold needs " +
-            "strictly increasing batch boundaries; rebuild from the " +
-            "full log for out-of-order arrivals")
-        val firstW = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol))
-          .orderBy(col("effective_from") +: attrCols.map(col): _*)
-        // the stored CURRENT segment holds exactly the open versions
-        val cur = stored.select(col(keyCol), attrs.as("__cs"))
-        // drop a batch's FIRST version when it repeats the stored
-        // current state — Scd2.history marks every key's first batch
-        // row as a change (lag sees NULL), but across the boundary it
-        // is only a transition if the state actually moved
-        val kept = bh
-          .withColumn("__rn", row_number().over(firstW))
-          .join(cur, Seq(keyCol), "left")
-          .where(col("__rn") =!= 1 || col("__cs").isNull ||
-            !(attrs <=> col("__cs")))
-          .drop("__rn", "__cs")
-          // consumed three times (closed rows, current rows, the
-          // close-point aggregation) across two write actions
-          .localCheckpoint(true)
-        val closeAt = kept.groupBy(col(keyCol))
-          .agg(min(col("effective_from")).as("__close"))
-        // stored current rows superseded this batch → closed segment;
-        // the rest stay current untouched
-        val storedClosed = stored.join(closeAt, Seq(keyCol))
-          .withColumn("effective_to", col("__close"))
-          .drop("__close")
-          .withColumn("is_current", lit(false))
-        val storedStillCurrent =
-          stored.join(closeAt, Seq(keyCol), "left_anti")
-        (storedClosed.unionByName(kept.where(!col("is_current"))),
-          storedStillCurrent.unionByName(kept.where(col("is_current"))))
+      f.stored("/history").fold(
+        (bh.where(!col("is_current")), bh.where(col("is_current")))) {
+        stored =>
+          // the exactness guard: one broadcast-nested-loop probe of the
+          // batch against the single-row mark, first violation suffices
+          val viol = valid.join(broadcast(f.latest("/hwm")),
+            col(tsCol) <= col("hwm")).limit(1).count()
+          require(viol == 0L,
+            s"refreshScd2: batch $batchId carries timestamps at or below " +
+              "the stored high-water mark — the incremental fold needs " +
+              "strictly increasing batch boundaries; rebuild from the " +
+              "full log for out-of-order arrivals")
+          val firstW = org.apache.spark.sql.expressions.Window
+            .partitionBy(col(keyCol))
+            .orderBy(col("effective_from") +: attrCols.map(col): _*)
+          // the stored CURRENT segment holds exactly the open versions
+          val cur = stored.select(col(keyCol), attrs.as("__cs"))
+          // drop a batch's FIRST version when it repeats the stored
+          // current state — Scd2.history marks every key's first batch
+          // row as a change (lag sees NULL), but across the boundary it
+          // is only a transition if the state actually moved
+          val kept = bh
+            .withColumn("__rn", row_number().over(firstW))
+            .join(cur, Seq(keyCol), "left")
+            .where(col("__rn") =!= 1 || col("__cs").isNull ||
+              !(attrs <=> col("__cs")))
+            .drop("__rn", "__cs")
+            // consumed three times (closed rows, current rows, the
+            // close-point aggregation) across two write actions
+            .localCheckpoint(true)
+          val closeAt = kept.groupBy(col(keyCol))
+            .agg(min(col("effective_from")).as("__close"))
+          // stored current rows superseded this batch → closed segment;
+          // the rest stay current untouched
+          val storedClosed = stored.join(closeAt, Seq(keyCol))
+            .withColumn("effective_to", col("__close"))
+            .drop("__close")
+            .withColumn("is_current", lit(false))
+          val storedStillCurrent =
+            stored.join(closeAt, Seq(keyCol), "left_anti")
+          (storedClosed.unionByName(kept.where(!col("is_current"))),
+            storedStillCurrent.unionByName(kept.where(col("is_current"))))
       }
     val batchMax = valid.agg(max(col(tsCol)).as("hwm"))
-    val hwmNext =
-      if (last < 0) batchMax
-      else spark.read.parquet(s"$path/v$last/hwm")
-        .unionByName(batchMax).agg(max(col("hwm")).as("hwm"))
+    val hwmNext = f.stored("/hwm").fold(batchMax)(
+      _.unionByName(batchMax).agg(max(col("hwm")).as("hwm")))
     // The four pre-commit writes — the closed partition, its high-water
     // manifest row (the [[scd2AsOf]] pruning sidecar: every row in
     // closed/batch=N has effective_to <= hwm_N), and the two staged
     // current-segment files — are mutually independent idempotent
     // overwrites into disjoint paths, ALL invisible to readers until
-    // the rename below commits, so they run as concurrent jobs (r19
-    // optimization, guide §2.6) instead of four sequential tails. The
-    // crash window widens only symmetrically: before, a crash could
-    // land closed/batch=N without its manifest row; now any subset of
-    // the four can land — every combination is either invisible (tmp),
-    // guarded (a closed orphan under a DIFFERENT next id raises above),
-    // or benign (a manifest row whose closed partition is absent prunes
+    // the rename commits, so they run as concurrent jobs instead of four
+    // sequential tails. Any subset of the four can land before a crash;
+    // every combination is either invisible (the staged version),
+    // guarded (a closed orphan under a DIFFERENT next id raises), or
+    // benign (a manifest row whose closed partition is absent prunes
     // nothing and reads zero rows), and replaying the SAME id rewrites
     // all four (Scd2IncrementalSpec's crash cases).
-    val tmp = s"$path/_tmp_v$batchId"
-    graft.operators.Par.jobs(Seq(
+    tmp => graft.operators.Par.jobs(Seq(
       () => closedNew.write.mode("overwrite")
         .parquet(s"$path/closed/batch=$batchId"),
       () => hwmNext.coalesce(1).write.mode("overwrite")
@@ -2301,24 +2070,14 @@ object SilverIndex {
       () => currentNext.write.mode("overwrite").parquet(s"$tmp/history"),
       () => hwmNext.coalesce(1).write.mode("overwrite")
         .parquet(s"$tmp/hwm")))
-    require(fs.rename(new Path(tmp), new Path(s"$path/v$batchId")),
-      s"scd2 commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v => fs.delete(new Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
   }
 
   /** [[refreshScd2]] driven by Structured Streaming. */
   def streamingRefreshScd2(rows: DataFrame, keyCol: String,
       attrCols: Seq[String], tsCol: String, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshScd2(batch, id, keyCol, attrCols, tsCol, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    foreachBatchStream(rows, path)(refreshScd2(_, _, keyCol, attrCols, tsCol,
+      path))
 
   /** The maintained history (one row per attribute version): the
     * immutable closed segments unioned with the highest committed
@@ -2328,23 +2087,20 @@ object SilverIndex {
     * (N > the committed version): its rows would otherwise double with
     * the still-open versions the replay will close again. */
   def scd2Index(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed scd2 history under $path")
-    val current = spark.read.parquet(s"$path/v${vs.max}/history")
+    val f = new VersionedFold(spark, path, "scd2 history")
+    val current = f.latest("/history")
     readIfData(spark, s"$path/closed")
-      .map(_.where(col("batch") <= vs.max).drop("batch")
+      .map(_.where(col("batch") <= f.last).drop("batch")
         .unionByName(current))
       .getOrElse(current)
   }
 
-  /** POINT-IN-TIME serve from the maintained SCD2 history (g7,
-    * VERDICT r17 task 4) — the audit question the index exists for
-    * ("state of key K at time T") answered WITHOUT the g4
-    * reconstruction's full-log scan: versions alive at `asOf` are
-    * `effective_from <= T < effective_to` (open versions: effective_to
-    * null), and the two-segment layout prunes almost everything —
+  /** POINT-IN-TIME serve from the maintained SCD2 history (g7) — the
+    * audit question the index exists for ("state of key K at time T")
+    * answered WITHOUT the g4 reconstruction's full-log scan: versions
+    * alive at `asOf` are `effective_from <= T < effective_to` (open
+    * versions: effective_to null), and the two-segment layout prunes
+    * almost everything —
     *  - the CURRENT segment is keys-sized (one open version per key);
     *  - closed segments prune by the per-batch high-water manifest:
     *    every row in closed/batch=N has effective_to <= hwm_N, so any
@@ -2353,18 +2109,15 @@ object SilverIndex {
     *    at 100 TB an audit at a recent T reads the recent batches +
     *    the current segment, not years of closed history).
     * Orphaned partitions (crashed folds) are excluded exactly as in
-    * [[scd2Index]]; a legacy index without manifests serves every
-    * committed closed partition (row filters still apply — correct,
-    * just unpruned). Equals the g4 rebuild filtered to T row-for-row
-    * (g7's oracle). */
+    * [[scd2Index]]; an index without manifests serves every committed
+    * closed partition (row filters still apply — correct, just
+    * unpruned). Equals the g4 rebuild filtered to T row-for-row (g7's
+    * oracle). */
   def scd2AsOf(spark: SparkSession, path: String,
       asOf: Column): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed scd2 history under $path")
+    val f = new VersionedFold(spark, path, "scd2 history")
     val t = asOf
-    val current = spark.read.parquet(s"$path/v${vs.max}/history")
+    val current = f.latest("/history")
       .where(col("effective_from") <= t &&
         (col("effective_to").isNull || col("effective_to") > t))
     readIfData(spark, s"$path/closed").fold(current) { cl =>
@@ -2373,13 +2126,13 @@ object SilverIndex {
       // already dead at T
       val dead: Seq[Long] = readIfData(spark, s"$path/closedhwm")
         .fold(Seq.empty[Long]) { m =>
-          m.where(col("batch") <= vs.max && col("hwm") <= t)
+          m.where(col("batch") <= f.last && col("hwm") <= t)
             .select(col("batch").cast("long")).collect()
             .map(_.getLong(0)).toSeq
         }
       val pruned =
-        if (dead.isEmpty) cl.where(col("batch") <= vs.max)
-        else cl.where(col("batch") <= vs.max &&
+        if (dead.isEmpty) cl.where(col("batch") <= f.last)
+        else cl.where(col("batch") <= f.last &&
           !col("batch").isin(dead: _*))
       pruned.drop("batch")
         .where(col("effective_from") <= t && col("effective_to") > t)
@@ -2387,186 +2140,19 @@ object SilverIndex {
     }
   }
 
-  /** [[streamingRefresh]] pre-wired to [[refreshKmv]]. */
-  def streamingRefreshKmv(rows: DataFrame, groupCol: String,
-      keyCol: String, k: Int, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamingRefresh(rows, path)(refreshKmv(_, groupCol, keyCol, k, path))
-
-  /** The sketch table as stored: (grp, kmins) — the highest committed
-    * version under `path`/sketch (or the pre-versioned flat layout if
-    * no version has been committed yet — see [[refreshKmv]]'s
-    * migration note). */
-  def kmvIndex(spark: SparkSession, path: String): DataFrame = {
-    val root = s"$path/sketch"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, root)
-    if (vs.nonEmpty) spark.read.parquet(s"$root/v${vs.max}")
-    else {
-      require(flatDataFiles(fs, root).nonEmpty,
-        s"no committed KMV sketch under $root")
-      spark.read.parquet(root)
-    }
-  }
-
-  /** [[streamingRefresh]] pre-wired to [[refreshPostings]]. */
-  def streamingRefreshPostings(docs: DataFrame, idCol: String,
-      textCol: String, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamingRefresh(docs, path)(refreshPostings(_, idCol, textCol, path))
-
-  /** [[streamingRefresh]] pre-wired to [[refreshMinhash]]. */
-  def streamingRefreshMinhash(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, numHashes: Int, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamingRefresh(docs, path)(
-      refreshMinhash(_, idCol, textCol, n, numHashes, path))
-
-  /** Streaming NEAR-DUP detection: every micro-batch (1) appends its
-    * genuinely-new docs' signatures to the table at `sigPath` (the
-    * [[refreshMinhash]] anti-join discipline), then (2) emits the
-    * near-dup pairs INVOLVING those new docs against the full
-    * post-append signature table
-    * ([[graft.operators.Dedup.minhashPairsDelta]]) into `pairsPath`.
-    * Each pair lands exactly once — in the batch where its later-
-    * arriving member arrives — so the accumulated pairs table is
-    * row-identical to a from-scratch batch [[graft.operators
-    * .Dedup.minhashLshPairs]] over the same corpus (the s6 gate
-    * contract), and a REPLAYED batch (foreachBatch is at-least-once)
-    * finds zero new ids, appends zero signatures, and emits zero pairs
-    * — the same exactly-once-by-anti-join argument as
-    * [[streamingRefresh]], extended to the derived pair stream. The
-    * new-id frame is eagerly materialized BEFORE the signature append
-    * (localCheckpoint), since the append changes what the lazy
-    * anti-join would read. */
-  def streamingNearDupPairs(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, numHashes: Int, rowsPerBand: Int,
-      theta: Double, sigPath: String, pairsPath: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        nearDupBatch(batch.toDF(), batchId, idCol, textCol, n,
-          numHashes, rowsPerBand, theta, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
-
-  /** One micro-batch of [[streamingNearDupPairs]] — the foreachBatch
-    * body, factored out so a spec can drive the RECOVERY path directly
-    * over a hand-built half-committed directory (crash after the
-    * intent commit, crash after the signature append, partial intent
-    * write) instead of only observing the happy path end-to-end. */
-  private[pipeline] def nearDupBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, n: Int, numHashes: Int,
-      rowsPerBand: Int, theta: Double, sigPath: String,
-      pairsPath: String): Unit = {
-        val spark = batch.sparkSession
-        // TRANSACTION INTENT: the batch's new-id set, persisted before
-        // any table mutates. The two mutations below (signature append,
-        // pair write) are not atomic together — a crash between them
-        // would otherwise lose the batch's pairs forever, because a
-        // replay's anti-join against the ALREADY-APPENDED signatures
-        // finds nothing new. The stored intent makes the replay reuse
-        // the original new-id set instead of re-deriving it against
-        // mutated state. One tiny file per batch, kept (deleting it
-        // would reopen the same window).
-        val intentDir = s"$sigPath/_intent/batch$batchId"
-        // guard on COMMITTED data files, not bare existence: the dir
-        // exists as soon as a write STARTS — fs.exists would send the
-        // replay down the read branch into a failing (or empty) read
-        // over leftover debris. hasDataFiles skips hidden subtrees.
-        // The intent itself commits by STAGE-THEN-RENAME (one file via
-        // coalesce(1), staged under _tmp_, one atomic dir rename): a
-        // direct multi-file write commits part files one rename at a
-        // time, so a crash MID-job-commit could leave a readable but
-        // INCOMPLETE id set — the replay would then silently drop the
-        // missing ids' signatures and pairs forever. The dir rename
-        // makes the intent all-or-nothing; any pre-rename crash leaves
-        // no committed data files and the replay re-derives (nothing
-        // has mutated before the intent commit).
-        val newIds = intentNewIds(spark, sigPath, batchId,
-          batch.select(col(idCol).as("doc")).distinct())
-        // the batch is pre-filtered to the intent so refreshMinhash's
-        // interior anti-join (kept: it is the append's own replay
-        // guard) runs on the already-new side only
-        refreshMinhash(
-          batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-            "left_semi"),
-          idCol, textCol, n, numHashes, sigPath)
-        // per-batch partition + OVERWRITE = idempotent pair emission:
-        // the replay recomputes the identical pairs (same stored
-        // intent, same post-append signature table) into the same
-        // partition — a plain append would duplicate them
-        graft.operators.Dedup
-          .minhashPairsDelta(minhashIndex(spark, sigPath), newIds,
-            rowsPerBand, theta)
-          .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-        ()
-  }
-
-  /** The TRANSACTION-INTENT read-or-derive step factored out of
-    * [[nearDupBatch]] (semantics unchanged — the crash rationale lives
-    * in the comments there): return the batch's NEW id set, reading
-    * the persisted intent when one committed, deriving and committing
-    * it (stage-then-rename, single file) otherwise. Shared by the
-    * minhash (s6) and frame-fingerprint (m9) incremental pair
-    * emitters. `ids` must be the batch's distinct ids as a `doc`
-    * column. */
-  private def intentNewIds(spark: SparkSession, sigPath: String,
-      batchId: Long, ids: DataFrame): DataFrame = {
-    val intentDir = s"$sigPath/_intent/batch$batchId"
-    if (hasDataFiles(spark, intentDir)) spark.read.parquet(intentDir)
-    else {
-      val fresh = readIfData(spark, sigPath)
-        .fold(ids)(ix =>
-          ids.join(ix.select("doc"), Seq("doc"), "left_anti"))
-        .localCheckpoint(true)
-      val fs = new org.apache.hadoop.fs.Path(sigPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = s"$sigPath/_intent/_tmp_batch$batchId"
-      fresh.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val dst = new org.apache.hadoop.fs.Path(intentDir)
-      if (fs.exists(dst)) fs.delete(dst, true) // pre-fix debris
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-        s"intent commit rename failed: $tmp -> $intentDir")
-      fresh
-    }
-  }
-
-  /** [[streamingRefresh]] pre-wired to [[refreshIvf]] (first batch
-    * trains and freezes the quantizer, later batches assign-and-append
-    * — the standard IVF append discipline under streaming arrival). */
-  def streamingRefreshIvf(docs: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamingRefresh(docs, path)(refreshIvf(_, idCol, vecCol, nlist, path))
-
-  /** [[streamingRefresh]] pre-wired to [[refreshIvfPq]] (first non-empty
-    * batch trains BOTH frozen quantizers — coarse centroids and residual
-    * codebooks — later batches residual-encode only unseen ids and
-    * append, the same discipline at 40 bits + a stored norm per
-    * vector). */
-  def streamingRefreshIvfPq(docs: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, m: Int, ksub: Int, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamingRefresh(docs, path)(
-      refreshIvfPq(_, idCol, vecCol, nlist, m, ksub, path))
-
   // ------------------------------------------------------------- erasure
 
   /** What an erasure fold did: rows removed / rows remaining. */
   final case class Erased(removed: Long, remaining: Long)
 
   /** Rewrite the table at `dirStr` through `transform` (an erasure
-    * anti-join) with the [[compactListTable]] staged-swap commit: the
-    * survivors land in a staging dir, then two renames swap them live —
-    * a crash leaves either the old or the new table, never a
+    * anti-join, or the identity for compaction) with a staged-swap
+    * commit: the output lands in a staging dir, then two renames swap
+    * it live — a crash leaves either the old or the new table, never a
     * half-deleted one, and a RERUN restores the surviving copy before
     * deleting anything. Both row counts ride Observations on the ONE
     * rewrite job (no separate count jobs); the row-count sidecar is
-    * refreshed so post-erasure refreshes stay metadata-only.
+    * refreshed so later refreshes stay metadata-only.
     *
     * Scale shape: one scan + one broadcast anti-join + one write —
     * the erasure rewrite is a compaction with a filter, so it batches
@@ -2580,20 +2166,26 @@ object SilverIndex {
       shape: DataFrame => DataFrame = identity)(
       transform: DataFrame => DataFrame): Erased = {
     val live = new Path(dirStr)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(spark, dirStr)
     val staging = new Path(dirStr + "__compacting")
     val retired = new Path(dirStr + "__retired")
-    // crash recovery BEFORE any delete — the compactListTable
-    // discipline (rationale there): prefer the known-good retired
-    // copy, else a staging dir (valid only when the live table is
-    // gone, i.e. the first rename committed)
+    // crash recovery BEFORE any delete: a prior run that died between
+    // its two renames leaves the live path empty with the only
+    // surviving copies at __retired (the old table) and possibly
+    // __compacting (the completed rewrite). Deleting those while the
+    // live dir is missing would be permanent data loss; restore one of
+    // them first. Preference: __retired (the known-good table; the
+    // rerun below rewrites it anyway), else a staging dir — which is
+    // only a valid recovery source when the live table is GONE, i.e.
+    // the first rename committed, which implies the staging write
+    // completed.
     if (!fs.exists(live)) {
       val src = if (fs.exists(retired)) retired
         else if (fs.exists(staging)) staging
         else throw new IllegalStateException(
-          s"erase: no table at $live and nothing to recover")
+          s"rewrite: no table at $live and nothing to recover")
       require(fs.rename(src, live),
-        s"erase: could not restore $src to $live")
+        s"rewrite: could not restore $src to $live")
     }
     fs.delete(staging, true); fs.delete(retired, true)
     val obsB = org.apache.spark.sql.Observation()
@@ -2604,9 +2196,9 @@ object SilverIndex {
     val w = out.write
     (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
       .parquet(staging.toString)
-    require(fs.rename(live, retired), s"erase: could not retire $live")
+    require(fs.rename(live, retired), s"rewrite: could not retire $live")
     require(fs.rename(staging, live),
-      s"erase: could not activate $staging — old table at $retired")
+      s"rewrite: could not activate $staging — old table at $retired")
     fs.delete(retired, true)
     val before = obsB.get("n").asInstanceOf[Long]
     val kept = obsK.get("n").asInstanceOf[Long]
@@ -2638,14 +2230,13 @@ object SilverIndex {
     * that keeps the pair consistent under any interleaving. */
   def erasePostings(spark: SparkSession, path: String,
       subjects: DataFrame, subjectCol: String): Erased = {
-    // a legacy index (postings copied in, companion never built) has no
-    // doclen dir for the rewrite below to swap — materialize it first;
-    // idempotent and metadata-cheap when the sidecar is already fresh
+    // an index whose companion was never built has no doclen dir for
+    // the rewrite below to swap — materialize it first; idempotent and
+    // metadata-cheap when the sidecar is already fresh
     ensureBm25Aux(spark, path)
     val r = eraseKeyed(spark, path, "doc", subjects, subjectCol,
       shape = _.sortWithinPartitions(col("term")))
     eraseKeyed(spark, doclenPath(path), "doc", subjects, subjectCol)
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     // readIfData: a FULL-corpus erasure leaves a dir with no data files
     // (empty writes emit no part files), which schema inference rejects
     val st = readIfData(spark, doclenPath(path)).fold(Bm25Stats(0L, 0L)) {
@@ -2654,7 +2245,7 @@ object SilverIndex {
           .head()
         Bm25Stats(row.getLong(0), row.getLong(1))
     }
-    writeBm25Meta(fs, path, st)
+    writeBm25Meta(fsOf(spark, path), path, st)
     r
   }
 
@@ -2711,7 +2302,7 @@ object SilverIndex {
       subjectCol, partitionCols = Seq("list_id"),
       shape = _.repartition(col("list_id")))
 
-  /** REBUILD-FROM-CLEAN contract for the insert-only sketches. The
+  /** REBUILD-FROM-CLEAN contract for the VersionedFold artifacts. The
     * maintained KMV minima, Bloom positions, and HLL registers are
     * MONOTONE folds (truncated union / set union / per-bucket max) and
     * CMS counters are additive without per-key attribution — none can
@@ -2728,9 +2319,7 @@ object SilverIndex {
     * could give. Cost is one corpus pass per compliance window —
     * batch the window's subjects, reset once. */
   def resetSketch(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
+    fsOf(spark, path).delete(new Path(path), true)
     ()
   }
 
@@ -2769,9 +2358,7 @@ object SilverIndex {
     val (lists, rows, maxN) =
       (byList.getLong(0), Option(byList.get(1)).fold(0L)(_ => byList.getLong(1)),
         Option(byList.get(2)).fold(0L)(_ => byList.getLong(2)))
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = dataStats(fs, p)._1
+    val files = dataStats(fsOf(spark, dir), new Path(dir))._1
     val mean = if (lists == 0) 0.0 else rows.toDouble / lists
     val imb = if (mean == 0.0) 0.0 else maxN / mean
     IvfStats(lists, rows, files, maxN, mean, imb,
@@ -2779,24 +2366,6 @@ object SilverIndex {
       rebuildRecommended = imb > imbalanceThreshold)
   }
 
-  /** Rewrite the IVF assignment table into one sized file per list,
-    * undoing append fragmentation (every delta refresh adds a file per
-    * touched list — a weekly-refreshed index accumulates refreshes ×
-    * nlist objects). Same rows, same layout contract
-    * (`list_id`-partitioned), one narrow shuffle; the rewrite lands in
-    * a staging dir and swaps in with two renames so a crash leaves
-    * either the old or the new table, never a half-deleted one — and a
-    * RERUN after a crash between the renames restores the surviving
-    * copy before deleting anything (SilverIndexSpec pins the recovery).
-    *
-    * What compaction buys is the METADATA path: listing/open cost per
-    * probe and per refresh (the before/after counts and the anti-join
-    * list every file, every run — and object stores bill and throttle
-    * per request). A compute-bound probe's wall time is unchanged:
-    * tools/compaction_smoke_r7.txt measures 640 → 64 files with
-    * identical probe results and parity wall at 1M vectors, where 125M
-    * cosine evals dwarf local file opens. Compact on `filesPerList`,
-    * not on probe latency. */
   /** What a maintenance sweep decided and did. `stats` is the pre-sweep
     * measurement the decisions were made on. */
   final case class Maintenance(stats: IvfStats, compacted: Boolean,
@@ -2827,8 +2396,7 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val stats = ivfStats(spark, path, imbalanceThreshold)
     if (stats.rebuildRecommended) {
-      val fs = new Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = fsOf(spark, path)
       fs.delete(new Path(asgPath(path)), true)
       fs.delete(new Path(centPath(path)), true)
       refreshIvf(corpus, idCol, vecCol, nlist, path)
@@ -2839,6 +2407,23 @@ object SilverIndex {
     } else Maintenance(stats, compacted = false, rebuilt = false)
   }
 
+  /** Rewrite the IVF assignment table into one sized file per list,
+    * undoing append fragmentation (every delta refresh adds a file per
+    * touched list — a weekly-refreshed index accumulates refreshes ×
+    * nlist objects). Same rows, same layout contract
+    * (`list_id`-partitioned), one narrow shuffle, committed by the
+    * [[rewriteSwap]] staged swap — a crash leaves either the old or the
+    * new table, and a RERUN after a crash between the renames restores
+    * the surviving copy before deleting anything (SilverIndexSpec pins
+    * the recovery).
+    *
+    * What compaction buys is the METADATA path: listing/open cost per
+    * probe and per refresh (the anti-join lists every file, every run —
+    * and object stores bill and throttle per request). A compute-bound
+    * probe's wall time is unchanged: tools/compaction_smoke_r7.txt
+    * measures 640 → 64 files with identical probe results and parity
+    * wall at 1M vectors, where 125M cosine evals dwarf local file
+    * opens. Compact on `filesPerList`, not on probe latency. */
   def compactIvf(spark: SparkSession, path: String): Unit =
     compactListTable(spark, asgPath(path))
 
@@ -2847,40 +2432,9 @@ object SilverIndex {
     compactListTable(spark, codesPath(path))
 
   private def compactListTable(spark: SparkSession, dirStr: String): Unit = {
-    val live = new Path(dirStr)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new Path(dirStr + "__compacting")
-    val retired = new Path(dirStr + "__retired")
-    // crash recovery BEFORE any delete: a prior run that died between its
-    // two renames leaves the live path empty with the only surviving
-    // copies at __retired (the old table) and possibly __compacting (the
-    // completed rewrite — same rows). Deleting those while the live dir
-    // is missing would be permanent data loss; restore one of them first.
-    // Preference: __retired (the known-good pre-compaction table; the
-    // rerun below re-compacts it anyway), else a staging dir — which is
-    // only a valid recovery source when the live table is GONE, i.e. the
-    // first rename committed, which implies the staging write completed.
-    if (!fs.exists(live)) {
-      val src = if (fs.exists(retired)) retired
-        else if (fs.exists(staging)) staging
-        else throw new IllegalStateException(
-          s"compact: no table at $live and nothing to recover")
-      require(fs.rename(src, live), s"compact: could not restore $src to $live")
-    }
-    fs.delete(staging, true); fs.delete(retired, true)
-    val obs = org.apache.spark.sql.Observation()
-    spark.read.parquet(dirStr)
-      .observe(obs, count(lit(1)).as("n"))
-      .withColumn("list_id", col("list_id")) // partition col back into data
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id").parquet(staging.toString)
-    require(fs.rename(live, retired), s"compact: could not retire $live")
-    require(fs.rename(staging, live),
-      s"compact: could not activate $staging — old table at $retired")
-    fs.delete(retired, true)
-    // the rewrite job counted the rows for free — refresh the sidecar so
-    // post-compaction refreshes stay metadata-only
-    writeMetaRows(fs, dirStr, obs.get("n").asInstanceOf[Long])
+    rewriteSwap(spark, dirStr, Seq("list_id"),
+      _.repartition(col("list_id")))(identity)
+    ()
   }
 
   /** [[maintainIvf]] for the IVF-PQ index: rebuild on measured drift
@@ -2894,8 +2448,7 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val stats = ivfPqStats(spark, path, imbalanceThreshold)
     if (stats.rebuildRecommended) {
-      val fs = new Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = fsOf(spark, path)
       fs.delete(new Path(codesPath(path)), true)
       fs.delete(new Path(bookPath(path)), true)
       fs.delete(new Path(centPath(path)), true)

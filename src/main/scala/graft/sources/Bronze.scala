@@ -82,15 +82,6 @@ object Bronze {
       .drop("__graft_mid", "__graft_pid", "__graft_rn", "__graft_off")
   }
 
-  /** Register one parquet file/dir as `bronze.<table>`.
-    *
-    * Default `refresh = false` is the reference's exact semantics —
-    * `CREATE TABLE IF NOT EXISTS` (utils.py:178-184), meaning a weekly
-    * re-ingestion that lands NEW data in the lake still serves LAST
-    * week's bronze (the reference's "refreshes on new data" log line
-    * notwithstanding, db_sync.py:55). `refresh = true` is the fix a real
-    * deployment wants: overwrite the table from the current lake
-    * artifact so re-ingestion propagates. */
   /** Move a managed table's default location ASIDE when it exists WITHOUT
     * a catalog entry. A run that died between writing files and committing
     * the catalog entry leaves this orphan behind, and `saveAsTable` /
@@ -125,6 +116,15 @@ object Bronze {
       }
     }
 
+  /** Register one parquet file/dir as `bronze.<table>`.
+    *
+    * Default `refresh = false` is the reference's exact semantics —
+    * `CREATE TABLE IF NOT EXISTS` (utils.py:178-184), meaning a weekly
+    * re-ingestion that lands NEW data in the lake still serves LAST
+    * week's bronze (the reference's "refreshes on new data" log line
+    * notwithstanding, db_sync.py:55). `refresh = true` is the fix a real
+    * deployment wants: overwrite the table from the current lake
+    * artifact so re-ingestion propagates. */
   def register(spark: SparkSession, path: String, table: String,
       denseIdOrder: Option[Seq[String]] = None,
       refresh: Boolean = false): Unit = {

@@ -45,7 +45,7 @@ object JobProfile {
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       // drain the listener bus so late job-end events land
-      Thread.sleep(300)
+      graft.Bench.drainListenerBus(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val js = jobs.values.asScala.toSeq.sortBy(_.t0)
       val jsum = js.filter(_.t1 > 0).map(j => (j.t1 - j.t0) / 1e9).sum

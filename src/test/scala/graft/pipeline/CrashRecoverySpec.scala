@@ -23,6 +23,9 @@ import graft.operators.{Dedup, Sketches}
   *    an orphan `_tmp_v` never corrupts the fold, and a committed
   *    version survives every window (the in-place-overwrite bug lost
   *    the sole copy on a crash mid-write).
+  *  - the same two windows for every other versioned fold (Bloom, the
+  *    drift ledger, the max rollup, components) as rows of one
+  *    table-driven case.
   */
 class CrashRecoverySpec extends SparkTestBase {
 
@@ -277,39 +280,6 @@ class CrashRecoverySpec extends SparkTestBase {
     assert(SilverIndex.kmvIndex(spark, path).count() == 1L)
   }
 
-  test("KMV: pre-versioned flat layout is folded in, not silently dropped") {
-    val path = tmp("crash-kmv-flat")
-    val rows = (0L until 300L).map(i => (s"g${i % 3}", i % 97))
-    // hand-built legacy state: the sketch as the PRE-versioned code
-    // stored it — parquet files directly under $path/sketch
-    graft.operators.Sketches.kmvDistinct(
-        rows.take(200).toDF("grp", "key"), Seq("grp"), "key", k = 16)
-      .select(col("grp"), col("kmins"))
-      .write.parquet(s"$path/sketch")
-    // the reader serves the flat layout as-is
-    assert(SilverIndex.kmvIndex(spark, path).count() == 3L)
-    // the next fold uses it as the stored side and commits versioned
-    SilverIndex.refreshKmv(rows.drop(100).toDF("grp", "key"),
-      "grp", "key", k = 16, path = path)
-    def sketchSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getString(0) ->
-        r.getSeq[String](1).toVector).toMap
-    val whole = graft.operators.Sketches.kmvDistinct(
-        rows.toDF("grp", "key"), Seq("grp"), "key", k = 16)
-      .select(col("grp"), col("kmins"))
-    assert(sketchSet(SilverIndex.kmvIndex(spark, path)) ==
-      sketchSet(whole),
-      "flat-layout state was dropped from the fold")
-    // the flat files were retired after the versioned commit
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/sketch"))
-      .map(_.getPath.getName).filterNot(n =>
-        n.startsWith("_") || n.startsWith(".")).toSet
-    assert(entries == Set("v0"), s"leftovers: $entries")
-  }
-
   test("KMV fold survives an orphan _tmp and always keeps a committed copy") {
     val path = tmp("crash-kmv")
     val rows = (0L until 300L).map(i => (s"g${i % 3}", i % 97))
@@ -341,6 +311,98 @@ class CrashRecoverySpec extends SparkTestBase {
         new org.apache.hadoop.fs.Path(s"$path/sketch"))
       .map(_.getPath.getName).toSet
     assert(entries == Set("v1"), s"unexpected sketch dir contents: $entries")
+  }
+
+  // ------------------------------------ every other VersionedFold artifact
+
+  /** One VersionedFold artifact under crash injection: `fold(path, i)`
+    * folds batch i of three, `state` reads what the artifact serves,
+    * `whole` is the from-scratch state over all three batches, and
+    * `root` is the directory holding its `v<n>` versions. */
+  private final case class FoldCase(name: String, root: String => String,
+      fold: (String, Int) => Unit, state: String => Set[Seq[Any]],
+      whole: () => Set[Seq[Any]])
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  private def thirds[T](rows: Seq[T], i: Int): Seq[T] =
+    rows.grouped((rows.size + 2) / 3).toSeq(i)
+
+  private val bloomKeys = (0 until 600).map(i => (i * 7919 % 2003).toLong)
+  private val driftRows = (0 until 900).map(i => (s"p${i % 4}", s"c${i % 3}"))
+  private val rollupRows =
+    (0 until 900).map(i => (s"k${i % 17}", i.toLong, (i * 7 % 101).toLong))
+  private val edgeBatches = Seq(Seq((1L, 2L), (3L, 4L), (10L, 11L)),
+    Seq((2L, 3L), (20L, 21L)), Seq((11L, 20L), (5L, 6L)))
+
+  private val foldCases = Seq(
+    FoldCase("Bloom", p => s"$p/bloom",
+      (p, i) => SilverIndex.refreshBloom(thirds(bloomKeys, i).toDF("k"), "k",
+        numHashes = 3, mBits = 4096, p),
+      p => rowSet(SilverIndex.bloomIndex(spark, p).select("pos")),
+      () => rowSet(Sketches.bloomBuild(bloomKeys.toDF("k"), "k", 3, 4096))),
+    FoldCase("drift ledger", identity,
+      (p, i) => SilverIndex.refreshDriftLedger(
+        thirds(driftRows, i).toDF("period", "cat"), i.toLong, "period",
+        "cat", p),
+      p => rowSet(SilverIndex.driftLedgerIndex(spark, p)
+        .select("period", "category", "cnt")),
+      () => rowSet(driftRows.toDF("period", "category")
+        .groupBy("period", "category").agg(count(lit(1)).as("cnt")))),
+    FoldCase("max rollup", identity,
+      (p, i) => SilverIndex.refreshMaxRollup(
+        thirds(rollupRows, i).toDF("key", "a", "b"), i.toLong, Seq("key"),
+        Seq("a", "b"), p),
+      p => rowSet(SilverIndex.maxRollupIndex(spark, p).select("key", "a", "b")),
+      () => rowSet(rollupRows.toDF("key", "a", "b").groupBy("key")
+        .agg(max("a").as("a"), max("b").as("b")))),
+    FoldCase("components", identity,
+      (p, i) => SilverIndex.refreshComponents(edgeBatches(i).toDF("a", "b"),
+        i.toLong, "a", "b", p),
+      p => rowSet(SilverIndex.componentsIndex(spark, p)
+        .select("node", "component")),
+      () => rowSet(graft.operators.Components.connectedComponents(
+        edgeBatches.flatten.toDF("a", "b"), "a", "b")
+        .select("node", "component"))))
+
+  test("Bloom, drift ledger, max rollup and components folds survive an " +
+      "orphan _tmp and an unretired stale version") {
+    foldCases.foreach { c =>
+      val path = tmp(s"crash-fold-${c.name.replace(' ', '-')}")
+      val root = c.root(path)
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      c.fold(path, 0)
+      val v0 = spark.read.parquet(s"$root/v0")
+      val (v0Rows, v0Schema) = (v0.collect(), v0.schema)
+
+      // crash window 1: the next fold staged its version but died
+      // before the rename — an orphan _tmp_v1 with plausible content
+      v0.write.parquet(s"$root/_tmp_v1")
+      c.fold(path, 1) // the replay
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_tmp_v1")),
+        s"${c.name}: the orphan _tmp_v1 survived the replay")
+      val afterOne = c.state(path)
+
+      // crash window 2: v1's rename committed but v0 was never retired —
+      // recreate the older, DIFFERENT state so a wrong read is visible
+      spark.createDataFrame(java.util.Arrays.asList(v0Rows: _*), v0Schema)
+        .write.parquet(s"$root/v0")
+      assert(rowSet(spark.read.parquet(s"$root/v0")) != afterOne,
+        s"${c.name}: batch 1 did not change the state")
+      assert(c.state(path) == afterOne,
+        s"${c.name}: a stale surviving version shadowed the committed one")
+
+      // the next fold reads the highest version, commits, and retires
+      // both older ones
+      c.fold(path, 2)
+      val versions = fs.listStatus(new org.apache.hadoop.fs.Path(root))
+        .map(_.getPath.getName).filter(_.matches("v[0-9]+")).toSet
+      assert(versions == Set("v2"), s"${c.name}: stale versions: $versions")
+      assert(c.state(path) == c.whole(),
+        s"${c.name}: the folded state diverged from the from-scratch build")
+    }
   }
 
   test("erasePostings crash between the postings and doclen rewrites: " +

@@ -283,6 +283,9 @@ class StreamingIndexSpec extends SparkTestBase {
       rows.take(1200).toDF("id", "grp", "v"), "id", "v", Seq("grp"),
       "sq-stream-spec", rate = 0.3, path = path)
     assert(r.appended == 0, s"replay appended ${r.appended} rows")
+    val stored = spark.read.parquet(s"$path/sample").count()
+    assert(r.total == stored,
+      s"replay reported total ${r.total} with $stored rows stored")
   }
 
   test("streamed CMS == batch build; batch-id guard makes replays no-ops") {
